@@ -171,11 +171,11 @@ def split_leakage(
     text_col: str = "text",
     train_split: str = "train",
     hash_fn: str = "xx",
-    materialize: bool = True,
 ) -> DataFrame:
     """Eval-set contamination check: for each held-out split, how many
     of its documents share a content digest with a training document ->
-    (split, n_docs, n_leaked, leak_rate).
+    (split, n_docs, n_leaked, leak_rate). Runs Spark jobs when called,
+    not at the first action: it pins the (split, digest) table.
 
     The integrity counterpart to ``split_assign``: a hash-keyed split
     keeps an *example* on one side, but duplicates of its content can
@@ -211,10 +211,8 @@ def split_leakage(
     # per side, so Spark cannot reuse the exchange and executed the
     # whole upstream twice (r15 plan diff: 2 fingerprint subtrees ->
     # 1). Pin the two-column table once — the dedup.minhash_dedup
-    # diamond discipline; ``materialize=False`` keeps the operator
-    # fully lazy for callers that can't afford executor-disk pins.
-    if materialize:
-        hashed = hashed.localCheckpoint(eager=True)
+    # diamond discipline.
+    hashed = hashed.localCheckpoint(eager=True)
     train_h = (hashed.filter(F.col("_split") == train_split)
                .select("_h").distinct()
                .withColumn("_in_train", F.lit(1)))

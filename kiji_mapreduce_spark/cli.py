@@ -1591,21 +1591,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         # discipline)
         bl_table = (blocklist_table(spark, block_domains)
                     if block_domains else None)
-        if bl_table is not None or block_urls:
-            if bl_table is not None:
-                # pin the parse before the domain blocklist's suffix
-                # semi-join reads docs on BOTH sides (the diamond
-                # discipline): one WARC parse instead of two, and the
-                # eager action collects the observation exactly once —
-                # leaving the observed CollectMetrics inside both
-                # branches crashed Observation.get when AQE emptied a
-                # side (measured: all-media archive + blocklists).
-                # The URL-pattern-only path is a plain one-pass filter:
-                # no diamond, no pin
-                docs = docs.localCheckpoint(eager=True)
-            docs = filter_blocked(docs, spark,
-                                  blocked_domains=bl_table,
-                                  url_patterns=block_urls)
+        docs = filter_blocked(docs, spark, blocked_domains=bl_table,
+                              url_patterns=block_urls)
         if args.max_docs_per_domain > 0:
             from kiji_mapreduce_spark.pipeline.sample import stratum_topk
 
@@ -1688,17 +1675,11 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                 recs, spark, psl_rules=rules,
                 heuristic_domains=heuristic,
                 respect_noindex=not args.keep_noindex)
-            if bl_table is not None or block_urls:
-                # the blocklists police the SAME publishers for both
-                # halves of the ingest (the noindex-consistency rule);
-                # same shared table, same diamond pin — unpinned, the
-                # archive parse + Python media extraction would run
-                # twice
-                if bl_table is not None:
-                    media_rows = media_rows.localCheckpoint(eager=True)
-                media_rows = filter_blocked(
-                    media_rows, spark, blocked_domains=bl_table,
-                    url_patterns=block_urls, id_col="media_id")
+            # the blocklists police the SAME publishers for both
+            # halves of the ingest (the noindex-consistency rule)
+            media_rows = filter_blocked(
+                media_rows, spark, blocked_domains=bl_table,
+                url_patterns=block_urls, id_col="media_id")
             media_rows.write.mode("overwrite").parquet(
                 args.media_output)
             media = spark.read.parquet(args.media_output)

@@ -753,7 +753,6 @@ def compact_parquet(spark, path: str, target_bytes: int = 128 << 20,
 def pack_warc(records: DataFrame, shard_bytes: int = 1 << 30,
               n_shards: int | None = None,
               compression: str = "gzip",
-              materialize: bool = True,
               raw_col: str | None = None) -> DataFrame:
     """Typed WARC record rows -> archive SHARD rows (shard_id,
     n_records, n_bytes, content binary) — the write side of
@@ -765,7 +764,9 @@ def pack_warc(records: DataFrame, shard_bytes: int = 1 << 30,
     The reference's sink palette (``JobOutputSpec.java:53-66``) stops
     at text/seq/avro; crawl re-sharding (merge small dumps, split
     giant ones, strip rejected records and write what survives) needs
-    the archive format itself to be writable.
+    the archive format itself to be writable. When ``n_shards`` is
+    None it runs Spark jobs when called, not at the first action: it
+    pins the sized input and sums its bytes.
 
     Input columns: ``warc_type``, ``target_uri``, ``warc_date``,
     ``record_id``, ``content`` (the reader's schema — missing/empty
@@ -793,8 +794,8 @@ def pack_warc(records: DataFrame, shard_bytes: int = 1 << 30,
     publish byte-different files for the same shard path — and gzip
     writes zeroed mtimes, so shard bytes are deterministic under
     replay (speculative attempts produce identical files). When
-    ``n_shards`` is derived (None), ``materialize`` pins the sized
-    input with an eager localCheckpoint so the sizing aggregate and
+    ``n_shards`` is derived (None), the sized input is pinned with
+    an eager localCheckpoint so the sizing aggregate and
     the shard build don't each re-run the full source lineage (the
     bm25 postings discipline — for ``--from-warc`` re-shards that
     lineage is a full archive re-parse)."""
@@ -808,8 +809,7 @@ def pack_warc(records: DataFrame, shard_bytes: int = 1 << 30,
     sized = records.withColumn(
         "_bytes", F.coalesce(F.length(size_col), F.lit(0)) + 512)
     if n_shards is None:
-        if materialize:
-            sized = sized.localCheckpoint(eager=True)
+        sized = sized.localCheckpoint(eager=True)
         total = sized.agg(F.sum("_bytes")).collect()[0][0] or 0
         n_shards = max(1, -(-int(total) // shard_bytes))
     assigned = sized.withColumn(

@@ -35,18 +35,15 @@ class KeyValueStore:
         raise NotImplementedError
 
     def lookup(self, df: DataFrame, on: str | list[str] | None = None,
-               how: str = "left", broadcast: bool = True) -> DataFrame:
-        """Join this store onto ``df``.
+               how: str = "left") -> DataFrame:
+        """Join this store onto ``df``, broadcasting the store.
 
         ``on`` maps the probe column(s) of ``df`` to the store key columns
         (defaults to the store's own key column names). ``how='left'``
         gives get()-returns-null-on-miss semantics; ``left_semi`` /
         ``left_anti`` give containsKey / NOT containsKey.
         """
-        spark = df.sparkSession
-        build = self.dataframe(spark)
-        if broadcast:
-            build = F.broadcast(build)
+        build = F.broadcast(self.dataframe(df.sparkSession))
         probe_cols = [on] if isinstance(on, str) else (on or self.key_cols)
         if len(probe_cols) != len(self.key_cols):
             # zip would silently drop the unmatched key columns and join

@@ -248,7 +248,9 @@ def filter_blocked(docs: DataFrame, spark: SparkSession,
     """Drop documents whose host/domain is on a blocklist or whose URL
     matches a blocked pattern — the UT1/category-blocklist stage every
     production crawl-curation pipeline runs (adult, spam, malware
-    categories ship as domain lists of 10^4-10^6 entries).
+    categories ship as domain lists of 10^4-10^6 entries). With a domain
+    list it runs a Spark job when called, not at the first action: it
+    pins ``docs``, which the domain anti-join reads on both sides.
 
     Matching follows UT1 semantics: an entry blocks its exact host AND
     every subdomain — so ``ads.example.com`` blocks
@@ -268,11 +270,20 @@ def filter_blocked(docs: DataFrame, spark: SparkSession,
     and compile-validated up front."""
     from kiji_mapreduce_spark.pipeline.text import url_host
 
+    # validated before the pin, so a bad pattern fails before any job
+    patterns = _clean_patterns(url_patterns)
     out = docs
     bl = (blocked_domains if isinstance(blocked_domains, DataFrame)
           else blocklist_table(spark, blocked_domains)
           if blocked_domains else None)
     if bl is not None:
+        # the hit semi-join and the anti-join both read ``docs``: pin
+        # it so the upstream (a WARC parse, Python media extraction)
+        # runs once, and so an observed CollectMetrics upstream is
+        # collected once — inside both branches Observation.get
+        # crashed when AQE emptied a side (all-media archive +
+        # blocklists). The URL-pattern-only path is one filter, no pin.
+        out = out.localCheckpoint(eager=True)
         host = F.lower(F.coalesce(url_host(F.col(url_col)),
                                   F.col(domain_col)))
         parts = F.split(host, r"\.")
@@ -293,7 +304,6 @@ def filter_blocked(docs: DataFrame, spark: SparkSession,
                     how="leftsemi")
                 .select(id_col).distinct())
         out = out.join(hits, on=id_col, how="left_anti")
-    patterns = _clean_patterns(url_patterns)
     if patterns:
         alternation = "(?i)" + "|".join(f"(?:{p})" for p in patterns)
         out = out.filter(~F.coalesce(

@@ -110,11 +110,12 @@ def curate_corpus(
     config: CurateConfig | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Run the curation chain; returns surviving rows of ``docs`` with
     ``n_tokens``/``quality_score`` appended (plus ``overlap_frac`` when
     a benchmark is given, and ``split`` when ``config.splits`` is set).
+    Runs Spark jobs when called, not at the first action: it pins the
+    quality and survivor sets, and its inner stages pin theirs.
 
     If ``benchmark`` rows share ids with ``docs`` (in-corpus eval
     split), they are excluded from the output — a document cannot
@@ -122,7 +123,7 @@ def curate_corpus(
 
     The quality+dedup survivor set is a diamond: the near-dedup pass,
     the decontamination shingle scan, its total-id anchor, and the
-    final join all read it, so by default it is materialized once with
+    final join all read it, so it is materialized once with
     an eager localCheckpoint (the ``dedup.minhash_dedup`` discipline)
     instead of re-running the scoring scan per branch.
     """
@@ -138,11 +139,6 @@ def curate_corpus(
         docs = dedup.drop_boilerplate_lines(
             docs, text_col=text_col, id_col=id_col,
             max_doc_frac=cfg.strip_boilerplate,
-            # forward the flag (the gopher_repetition stage below
-            # already does): materialize=False must keep the WHOLE
-            # chain lazy, not eagerly checkpoint + count inside this
-            # one stage (r13 review finding)
-            materialize=materialize,
         ).drop("n_lines_dropped")
     if cfg.c4_rules:
         # C4 rewrites the text (line removal), so it runs before any
@@ -157,8 +153,7 @@ def curate_corpus(
         docs = text_ops.gopher_quality_filter(docs, text_col=text_col)
     if cfg.gopher_repetition:
         docs = text_ops.gopher_repetition_filter(
-            docs, text_col=text_col, id_col=id_col,
-            materialize=materialize)
+            docs, text_col=text_col, id_col=id_col)
     if cfg.compress_ratio_bounds is not None:
         # NULL/empty text has no ratio and passes through — this gate
         # judges redundancy, not existence (the quality gate below
@@ -199,12 +194,9 @@ def curate_corpus(
 
         from kiji_mapreduce_spark.pipeline import classifier
 
-        if materialize:
-            # the semi-join below reads `quality` on both sides; without
-            # this pin the regex quality-feature scan executes twice
-            # (the exact double-scan the dedup stage's comment documents
-            # eliminating — review finding)
-            quality = quality.localCheckpoint(eager=True)
+        # the semi-join below reads `quality` on both sides; without
+        # this pin the regex quality-feature scan executes twice
+        quality = quality.localCheckpoint(eager=True)
         # cfg.hash_fn must reach the feature hashing: a model trained
         # on md5-hashed features scored against xx-hashed indexes is
         # silently permuted — near-random probabilities through the
@@ -234,16 +226,14 @@ def curate_corpus(
     # passes — so pin it once with the same eager localCheckpoint the
     # classifier branch uses, paying one scan AND keeping the
     # skew-safe partial agg.
-    if materialize:
-        quality = quality.localCheckpoint(eager=True)
-    kept = dedup.drop_exact_duplicates(quality, text_col=text_col,
-                                       id_col=id_col)
-    if materialize:
-        # the survivor set is the diamond's apex (near-dedup, the
-        # decontamination shingle scan, its anchor, and the final join
-        # all read it) — pin it so each consumer reads materialized
-        # rows instead of re-running the dedup join
-        kept = kept.localCheckpoint(eager=True)
+    quality = quality.localCheckpoint(eager=True)
+    # the survivor set is the diamond's apex (near-dedup, the
+    # decontamination shingle scan, its anchor, and the final join
+    # all read it) — pin it so each consumer reads materialized
+    # rows instead of re-running the dedup join
+    kept = dedup.drop_exact_duplicates(
+        quality, text_col=text_col, id_col=id_col
+    ).localCheckpoint(eager=True)
     if cfg.near_threshold is not None:
         pairs = dedup.minhash_dedup(
             kept, text_col, id_col, threshold=cfg.near_threshold,

@@ -10,9 +10,7 @@ Scale shape: both sides reduce to distinct hashed shingles
 64-bit longs shuffle, never text). The benchmark side is tiny relative
 to a 100 TB corpus (eval sets are MBs), so the membership probe is a
 broadcast left-semi join — the corpus never shuffles at all; per-doc
-counts aggregate map-side. With ``broadcast_benchmark=False`` the probe
-becomes a shuffled semi-join on the hash for benchmark sets too large to
-broadcast.
+counts aggregate map-side.
 """
 
 from __future__ import annotations
@@ -30,7 +28,6 @@ def ngram_overlap(
     id_col: str = "doc_id",
     hash_fn: str = "xx",
     threshold: float = 0.5,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per document: overlap of its distinct word n-grams with the
     benchmark's n-gram union.
@@ -44,10 +41,9 @@ def ngram_overlap(
     (the suite's oracle mode).
     """
     cand = shingle_hashes(docs, text_col, id_col, n, hash_fn).distinct()
-    bench = (shingle_hashes(benchmark, text_col, id_col, n, hash_fn)
-             .select("_h").distinct().withColumn("_hit", F.lit(1)))
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(
+        shingle_hashes(benchmark, text_col, id_col, n, hash_fn)
+        .select("_h").distinct().withColumn("_hit", F.lit(1)))
     # membership as a left-join flag, so gram totals and hit counts come
     # from ONE pass over the candidate grams (a semi-join + separate
     # totals aggregate would re-execute the shingle scan per branch);
@@ -79,7 +75,6 @@ def contaminated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "xx",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Token spans of each document whose n-grams appear in the
     benchmark — the redaction-grade view of contamination (pipelines
@@ -107,10 +102,9 @@ def contaminated_spans(
     """
     cand = shingle_hashes(docs, text_col, id_col, n, hash_fn,
                           with_pos=True)
-    bench = (shingle_hashes(benchmark, text_col, id_col, n, hash_fn)
-             .select("_h").distinct())
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(
+        shingle_hashes(benchmark, text_col, id_col, n, hash_fn)
+        .select("_h").distinct())
     hits = cand.join(bench, on="_h", how="left_semi")
     w = Window.partitionBy(id_col).orderBy("pos")
     # gaps-and-islands over EXTENT overlap: new island when this hit

@@ -367,7 +367,6 @@ def ngram_jaccard_pairs(
 def repeated_ngram_coverage(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n: int = 3, min_docs: int = 2, hash_fn: str = "xx",
-    materialize_grams: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-text coverage: the fraction of token
     positions covered by a word n-gram that occurs in at least
@@ -378,7 +377,8 @@ def repeated_ngram_coverage(
     documents. Parity note: span *measurement* has no direct analogue in
     the reference (KijiMR ships the archetypes, not the analytics); the
     gather->combine->reduce shape it runs on mirrors
-    ``KijiGatherer``/``KijiReducer`` (KijiGatherer.java:40).
+    ``KijiGatherer``/``KijiReducer`` (KijiGatherer.java:40). Runs Spark
+    jobs when called, not at the first action: it pins the gram table.
 
     Returns one row per document (including zero-token documents):
     (id, n_tokens, covered_tokens, n_spans, dup_frac) where spans are
@@ -394,17 +394,10 @@ def repeated_ngram_coverage(
     over hit positions only — hits are a small fraction of positions at
     any duplication rate worth measuring. Nothing in the plan holds a
     document's text after the first projection.
-
-    ``materialize_grams`` trades executor storage for scans: the gram
-    table is ~1-2x the corpus text, so at the very largest corpora the
-    localCheckpoint may not fit local disks — ``False`` recomputes the
-    gram scan per consumer (three text scans, zero materialization)
-    instead. Results are identical either way.
     """
     grams = shingle_hashes(df, text_col, id_col, n, hash_fn,
-                           with_pos=True, outer=True)
-    if materialize_grams:
-        grams = grams.localCheckpoint(eager=True)
+                           with_pos=True, outer=True
+                           ).localCheckpoint(eager=True)
     freq = (grams.filter(F.col("_h").isNotNull())
             .groupBy("_h")
             .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
@@ -885,6 +878,9 @@ def connected_keep_ids(pairs: DataFrame, id_a: str = "id_a",
         # (reach_t >= 2*reach_{t-1}+1), converges to the identical
         # unique fixpoint (every label is the component minimum), and
         # the changed==0 confirmation is unchanged.
+        # In round 1 ``labels`` is the lazy seed aggregate, so it runs
+        # twice there; it reads only the checkpointed edges, which is
+        # cheaper than a dedicated pin job.
         parent = labels.select(F.col("doc_id").alias("keep_id"),
                                F.col("keep_id").alias("_pk"))
         new_labels = (stepped.join(parent, on="keep_id", how="left")
@@ -1370,7 +1366,6 @@ def drop_boilerplate_lines(df: DataFrame, text_col: str = "text",
                            max_doc_frac: float = 0.01,
                            min_docs: int = 2,
                            min_line_chars: int = 4,
-                           materialize: bool = True,
                            max_broadcast_lines: int = 10_000_000) -> DataFrame:
     """CCNet-style corpus-level line dedup: strip every line that
     ``boilerplate_lines`` flags and reassemble each document with its
@@ -1378,7 +1373,9 @@ def drop_boilerplate_lines(df: DataFrame, text_col: str = "text",
     ``text_col``, plus ``n_lines_dropped``). The other dedup operators
     remove whole near-duplicate DOCUMENTS; this removes the per-SITE
     template text that survives them — the single highest-volume
-    contaminant in web corpora after exact dups.
+    contaminant in web corpora after exact dups. Runs Spark jobs when
+    called, not at the first action: it pins the input and the flagged
+    lines, and counts the documents and the flagged lines.
 
     Scale shape: the boilerplate set is tiny relative to the corpus
     (that is what a frequency threshold means), so the strip join
@@ -1394,15 +1391,14 @@ def drop_boilerplate_lines(df: DataFrame, text_col: str = "text",
     collapse into the empty-text dedup group downstream).
 
     Four consumers read ``df`` (the doc count, the frequency
-    aggregation, the strip explode, the reattachment join), so by
-    default it is pinned once with an eager localCheckpoint — the
+    aggregation, the strip explode, the reattachment join), so it is
+    pinned once with an eager localCheckpoint — the
     ``minhash_dedup``/``curate`` discipline — rather than re-running
     the upstream scan per branch; the driver round-trips are two
     scalars (the document count the threshold needs, and the
     flagged-line count the broadcast guard needs).
     """
-    if materialize:
-        df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=True)
     boiler = boilerplate_lines(
         df, text_col=text_col, id_col=id_col,
         max_doc_frac=max_doc_frac, min_docs=min_docs,
@@ -1463,8 +1459,7 @@ def drop_boilerplate_lines(df: DataFrame, text_col: str = "text",
 def c4_span_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id",
                   span_sentences: int = 3,
-                  hash_fn: str = "xx",
-                  materialize: bool = True) -> DataFrame:
+                  hash_fn: str = "xx") -> DataFrame:
     """C4's corpus-level dedup (Raffel et al. 2020 §2.2): "we
     discarded all but one of any three-sentence span occurring more
     than once in the data set". Every sliding ``span_sentences``-long
@@ -1474,7 +1469,8 @@ def c4_span_dedup(df: DataFrame, text_col: str = "text",
     and every other occurrence has its sentences removed. Documents
     come back with ``text_col`` rebuilt from the surviving sentences
     (joined with a single space — the span comparison already
-    normalized whitespace) plus ``c4_sentences_dropped``.
+    normalized whitespace) plus ``c4_sentences_dropped``. Runs Spark jobs
+    when called, not at the first action: it pins the span table.
 
     Scale shape: sentences and spans are built as per-row ARRAY
     expressions (zero shuffle) and only (id, pos, span_hash) longs
@@ -1484,11 +1480,11 @@ def c4_span_dedup(df: DataFrame, text_col: str = "text",
     positions per doc (unique-key groupBy), and the id-keyed
     reattachment join. The exploded span table feeds both the winner
     aggregation and the loser anti-side — a diamond, pinned once
-    under ``materialize`` (the ``drop_boilerplate_lines``
-    discipline). Within-document repeats are deduped by the same
-    rule (first position wins). Removing a losing span removes ALL
-    its sentences even where it overlaps a winning span in the same
-    document — the greedy semantics of the original implementation.
+    (the ``drop_boilerplate_lines`` discipline). Within-document
+    repeats are deduped by the same rule (first position wins).
+    Removing a losing span removes ALL its sentences even where it
+    overlaps a winning span in the same document — the greedy
+    semantics of the original implementation.
     NULL text stays NULL. Complements ``drop_boilerplate_lines``
     (line-granular, frequency-thresholded) with the published
     span-granular remove-all-but-one rule.
@@ -1511,9 +1507,8 @@ def c4_span_dedup(df: DataFrame, text_col: str = "text",
                        F.posexplode(F.transform(
                            span_idx, lambda i: token_hash64(span_at(i),
                                                             hash_fn)))
-                       .alias("pos", "span_hash")))
-    if materialize:
-        spans = spans.localCheckpoint(eager=True)
+                       .alias("pos", "span_hash"))
+             .localCheckpoint(eager=True))
     winners = (spans.groupBy("span_hash")
                .agg(F.min(F.struct(F.col("_sp_id"), F.col("pos")))
                     .alias("_w"),
@@ -1554,8 +1549,7 @@ def c4_span_dedup(df: DataFrame, text_col: str = "text",
 def exact_substring_dedup(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id",
                           min_tokens: int = 50,
-                          hash_fn: str = "xx",
-                          materialize: bool = True) -> DataFrame:
+                          hash_fn: str = "xx") -> DataFrame:
     """ExactSubstr dedup (Lee et al. 2022, "Deduplicating Training
     Data Makes Language Models Better" §4.1): any ``min_tokens``-long
     token window whose exact text occurs more than once in the corpus
@@ -1569,7 +1563,8 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
     tool's default cuts every copy. Documents come back with
     ``text_col`` rebuilt from the surviving tokens (single-space
     joined — token windows already collapse whitespace) plus
-    ``tokens_dropped``.
+    ``tokens_dropped``. Runs Spark jobs when called, not at the
+    first action: it pins the window table and the merged spans.
 
     The paper thresholds at 50 BPE tokens; this implementation
     windows over whitespace tokens (the corpus-side tokenizer every
@@ -1606,7 +1601,7 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
     100k-token book with heavy duplication stays O(tokens), not
     O(tokens × removed). The exploded window table feeds both the
     winner aggregation and the loser anti-side — a diamond, pinned
-    once under ``materialize`` (the ``c4_span_dedup`` discipline),
+    once (the ``c4_span_dedup`` discipline),
     as is the merged span table (feeds counts, positions, and the
     affected-doc semi-join). NULL text stays NULL. Sentence-granular
     C4 removal is ``c4_span_dedup``; coverage MEASUREMENT without
@@ -1640,9 +1635,8 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
                         F.lead("pos", k - 1).over(w_ord).isNotNull())
             .filter(F.col("_full"))
             .select("_es_id", "pos",
-                    win_key(F.col("_wt")).alias("win_hash")))
-    if materialize:
-        wins = wins.localCheckpoint(eager=True)
+                    win_key(F.col("_wt")).alias("win_hash"))
+            .localCheckpoint(eager=True))
     winners = (wins.groupBy("win_hash")
                .agg(F.min(F.struct(F.col("_es_id"), F.col("pos")))
                     .alias("_w"),
@@ -1669,9 +1663,8 @@ def exact_substring_dedup(df: DataFrame, text_col: str = "text",
                   w_doc.rowsBetween(Window.unboundedPreceding, 0)))
               .groupBy("_es_id", "_grp")
               .agg(F.min("_start").alias("_start"),
-                   F.max("_end").alias("_end")))
-    if materialize:
-        merged = merged.localCheckpoint(eager=True)
+                   F.max("_end").alias("_end"))
+              .localCheckpoint(eager=True))
     # Rebuild ONLY affected docs: posexplode their tokens (semi-join on
     # the merged span table's ids — a semi build side needs no distinct
     # aggregate), LEFT-join the (disjoint, post-merge) removal

@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+#: node count up to which the per-round joins broadcast the rank vector
+BROADCAST_MAX_NODES = 1_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -40,7 +43,6 @@ def pagerank(
     iters: int = 5,
     round_dp: int = 12,
     checkpoint_every: int = 10,
-    broadcast_max_nodes: int = 1_000_000,
 ) -> DataFrame:
     """Fixed-iteration weighted PageRank over a directed edge table.
 
@@ -59,7 +61,7 @@ def pagerank(
     Join strategy (optimization guide §3.1): the rank vector holds
     exactly one row per node, and the node count is already on the
     driver (the ``n`` scalar below). When ``n <=
-    broadcast_max_nodes`` the per-round joins broadcast the rank /
+    BROADCAST_MAX_NODES`` the per-round joins broadcast the rank /
     contribution tables — the edge table is then NEVER re-shuffled
     (each round is ONE partial-agg exchange on the destination key
     instead of four: checkpointed RDD relations carry no stats, so
@@ -104,7 +106,7 @@ def pagerank(
     # a linear DAG that executes every shuffle exactly once. Lineage is
     # cut every ``checkpoint_every`` rounds purely to bound analyzer
     # cost on deep iteration counts.
-    tiny = n <= broadcast_max_nodes
+    tiny = n <= BROADCAST_MAX_NODES
     for i in range(iters):
         rank_src = rank.withColumnRenamed("node", "_src")
         contrib = (norm.join(

@@ -2341,18 +2341,6 @@ def _huff_lut(table: dict) -> tuple[list[int], list[int]]:
     return sym, ln
 
 
-def _huff_decode(reader: _JpegBitReader, table: dict) -> int:
-    """Bit-serial fallback (kept for table-sanity unit use); the hot
-    paths pre-build ``_huff_lut`` tables and call ``reader.decode``."""
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise UnsupportedMedia("invalid JPEG Huffman code")
-
-
 def _extend(v: int, s: int) -> int:
     """T.81 EXTEND: map an s-bit magnitude to its signed value."""
     if s == 0:

@@ -40,10 +40,10 @@ def bm25_scores(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     query_text_col: str = "query_text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Okapi BM25 score for every (query, document) pair that shares at
-    least one term.
+    least one term. Runs Spark jobs when called, not at the first
+    action: it pins the postings table.
 
     Returns (query_id, doc_id, score) with the unrounded double score —
     idf uses the always-positive Lucene form
@@ -51,7 +51,7 @@ def bm25_scores(
     queries with no matching term simply contribute no rows.
 
     The postings table is a diamond (the query probe, the doc-length
-    aggregate, and the corpus stats all read it), so by default it is
+    aggregate, and the corpus stats all read it), so it is
     materialized once with an eager localCheckpoint — same rationale as
     ``dedup.minhash_dedup``: without it Spark re-runs the corpus
     tokenize + aggregate once per branch.
@@ -60,9 +60,8 @@ def bm25_scores(
                 .select(F.col(id_col),
                         F.explode(tokens(F.col(text_col))).alias("term"))
                 .groupBy(id_col, "term")
-                .agg(F.count(F.lit(1)).alias("tf")))
-    if materialize:
-        postings = postings.localCheckpoint(eager=True)
+                .agg(F.count(F.lit(1)).alias("tf"))
+                .localCheckpoint(eager=True))
     # doc length = sum of tf — reuses the postings aggregate instead of
     # re-scanning the text
     lengths = postings.groupBy(id_col).agg(F.sum("tf").alias("dl"))

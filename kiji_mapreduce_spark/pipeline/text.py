@@ -735,8 +735,7 @@ _GOPHER_REP_THRESHOLDS = {
 
 def gopher_repetition_filter(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
-                             include_ngrams: bool = True,
-                             materialize: bool = True) -> DataFrame:
+                             include_ngrams: bool = True) -> DataFrame:
     """Drop documents breaching ANY of Gopher's 13 published
     repetition bounds: the four line/paragraph signals (zero-shuffle,
     ``line_repetition_features``) and — when ``include_ngrams`` —
@@ -744,7 +743,9 @@ def gopher_repetition_filter(df: DataFrame, text_col: str = "text",
     duplicated 5-10-gram mass; one id-keyed shuffle via
     ``repetition_features``). Returns surviving input rows, signal
     columns dropped. Pairs with ``gopher_quality_filter`` for the
-    full published pre-gate."""
+    full published pre-gate. With ``include_ngrams`` it runs Spark
+    jobs when called, not at the first action: it pins the documents
+    that pass the line signals."""
     scored = line_repetition_features(df, text_col=text_col)
     cond = F.lit(True)
     for name in ("dup_line_frac", "dup_para_frac",
@@ -755,12 +756,11 @@ def gopher_repetition_filter(df: DataFrame, text_col: str = "text",
         "dup_line_char_frac", "dup_para_char_frac")
     if not include_ngrams:
         return kept
-    if materialize:
-        # `kept` is a diamond: the n-gram scoring job and the final
-        # anti-join both read it — pin it once (the curate.py
-        # discipline) instead of re-running the upstream scan + line
-        # features per branch
-        kept = kept.localCheckpoint(eager=True)
+    # `kept` is a diamond: the n-gram scoring job and the final
+    # anti-join both read it — pin it once (the curate.py
+    # discipline) instead of re-running the upstream scan + line
+    # features per branch
+    kept = kept.localCheckpoint(eager=True)
     ngram = repetition_features(kept, text_col=text_col, id_col=id_col,
                                 top_ns=(2, 3, 4),
                                 dup_ns=(2, 3, 4, 5, 6, 7, 8, 9, 10))

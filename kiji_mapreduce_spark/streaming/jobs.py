@@ -738,19 +738,13 @@ def stream_crawl_ingest(
             psl_rules=psl_rules, heuristic_domains=heuristic_domains,
             respect_noindex=respect_noindex,
             main_content=main_content)
-        if bl_table is not None or url_patterns:
-            # blocklists are per-RECORD work, so they stream naturally
-            # (unlike the corpus-level curation passes the CLI refuses
-            # to combine with --stream). The DOMAIN join reads docs on
-            # both sides, so pin first — one WARC parse per batch, not
-            # two; the URL-pattern-only path is a single-pass filter
-            # with no diamond and skips the pin
-            if bl_table is not None:
-                docs = docs.localCheckpoint(eager=True)
-            docs = filter_blocked(
-                docs, batch_df.sparkSession,
-                blocked_domains=bl_table,
-                url_patterns=url_patterns)
+        # blocklists are per-RECORD work, so they stream naturally
+        # (unlike the corpus-level curation passes the CLI refuses
+        # to combine with --stream)
+        docs = filter_blocked(
+            docs, batch_df.sparkSession,
+            blocked_domains=bl_table,
+            url_patterns=url_patterns)
         part = f"{output_dir}/batch_id={batch_id}"
         docs.write.mode("overwrite").parquet(part)
         if media_output:
@@ -758,15 +752,10 @@ def stream_crawl_ingest(
                 recs, batch_df.sparkSession, psl_rules=psl_rules,
                 heuristic_domains=heuristic_domains,
                 respect_noindex=respect_noindex)
-            if bl_table is not None or url_patterns:
-                # same diamond pin as the docs half: unpinned, the
-                # archive parse + media extraction would run twice
-                if bl_table is not None:
-                    media_rows = media_rows.localCheckpoint(eager=True)
-                media_rows = filter_blocked(
-                    media_rows, batch_df.sparkSession,
-                    blocked_domains=bl_table,
-                    url_patterns=url_patterns, id_col="media_id")
+            media_rows = filter_blocked(
+                media_rows, batch_df.sparkSession,
+                blocked_domains=bl_table,
+                url_patterns=url_patterns, id_col="media_id")
             media_rows.write.mode("overwrite").parquet(
                 f"{media_output}/batch_id={batch_id}")
         if batch_stats is not None:

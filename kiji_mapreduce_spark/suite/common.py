@@ -3,6 +3,8 @@ driver test parquet (nanos timestamps normalized, UTC session tz)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -93,10 +95,11 @@ def compute_parallel_target(spark: SparkSession) -> int:
     return max(2, spark.sparkContext.defaultParallelism // 2)
 
 
-#: (applicationId, path) -> the bare scan's partition count. Scan
-#: METADATA only (number of file splits — a pure function of the
-#: static fixture files and the session's split config), cached for
-#: the same reason and under the same key discipline as _SCHEMA_CACHE:
+#: (applicationId, path, st_mtime_ns, st_size) -> the bare scan's
+#: partition count. Scan METADATA only (number of file splits — a pure
+#: function of the fixture files and the session's split config); the
+#: stat fields make a rewritten fixture miss the cache and be measured
+#: again. Cached for the same reason as _SCHEMA_CACHE:
 #: ``df.rdd.getNumPartitions()`` costs a ~40-60 ms driver-side plan
 #: conversion per call, and the widen decision needs it on every
 #: query construction.
@@ -125,13 +128,15 @@ def widen_narrow_scan(df: DataFrame, target: int, *key_cols: str,
 
 def _t_widened(spark: SparkSession, sf_dir: str, name: str,
                *key_cols: str) -> DataFrame:
-    """``_t`` + ``widen_narrow_scan`` with the metadata caches keyed
-    consistently on (applicationId, path)."""
+    """``_t`` + ``widen_narrow_scan``, with the partition-count cache
+    keyed on (applicationId, path) plus the file's mtime and size."""
     path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
     return widen_narrow_scan(
         _t(spark, sf_dir, name), compute_parallel_target(spark),
         *key_cols,
-        cache_key=(spark.sparkContext.applicationId, path))
+        cache_key=(spark.sparkContext.applicationId, path,
+                   st.st_mtime_ns, st.st_size))
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -223,30 +223,6 @@ def _events_as_cells(spark, sf_dir):
         cells.cells_from_events(F.col("ts_ms"), F.col("value")).alias("value_cells"))
 
 
-def q_versioned_latest_event_value(spark, sf_dir):
-    """Build versioned cells per user; read back the most recent value
-    (getMostRecentValue). Tie at equal ts resolves to max value (cells
-    sort by (ts, value) desc)."""
-    t = _events_as_cells(spark, sf_dir)
-    return t.select(
-        "user_id",
-        cells.latest_value(F.col("value_cells")).alias("last_value"),
-        F.size("value_cells").alias("n_versions"),
-    )
-
-
-SQL_VERSIONED_LATEST = """
-SELECT user_id, value AS last_value, n_versions
-FROM (
-  SELECT user_id, value,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY epoch_ms(ts) DESC, value DESC) AS rn,
-         count(*) OVER (PARTITION BY user_id) AS n_versions
-  FROM events
-) WHERE rn = 1
-"""
-
-
 def q_versioned_slice_maxversions(spark, sf_dir):
     """maxVersions=3 slice + ts-range filter: newest 3 readings per user
     within 2024, exploded back to rows (KijiDataRequest withMaxVersions)."""
@@ -394,30 +370,4 @@ SELECT event_type, count(*) AS n_events,
        round(avg(value), 4) AS avg_value,
        count(DISTINCT date_part('hour', ts)) AS n_hours
 FROM events GROUP BY event_type
-"""
-
-
-def q_entity_key_hash(spark, sf_dir):
-    """Row-key encodings (SURVEY §1.1): HASH and HASH_PREFIX keys derived
-    from FORMATTED components, matching the reference's deterministic
-    hashed entity ids (md5-based)."""
-    from kiji_mapreduce_spark.layout import RowKeySpec
-
-    customer = _t(spark, sf_dir, "customer")
-    rk = RowKeySpec(format="FORMATTED", components=[("custkey", "long")])
-    with_eid = customer.select(
-        F.struct(F.col("c_custkey").alias("custkey")).alias("entity_id"))
-    packed = rk.key_expr()
-    return with_eid.select(
-        F.col("entity_id.custkey").alias("custkey"),
-        F.md5(packed).alias("key_hash"),
-        F.substring(F.md5(packed), 1, 4).alias("hash_prefix"),
-    )
-
-
-SQL_ENTITY_KEY_HASH = """
-SELECT c_custkey AS custkey,
-       md5(CAST(c_custkey AS VARCHAR)) AS key_hash,
-       substr(md5(CAST(c_custkey AS VARCHAR)), 1, 4) AS hash_prefix
-FROM customer
 """

@@ -73,26 +73,6 @@ FROM r
 """
 
 
-def q_text_byte_stats(spark, sf_dir):
-    """Binary-column handling: byte vs char lengths (multibyte docs)."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.octet_length("text").alias("n_bytes"),
-        F.length("text").alias("n_chars_txt"),
-        (F.octet_length("text") > F.length("text")).alias("is_multibyte"),
-    )
-
-
-SQL_TEXT_BYTE_STATS = """
-SELECT doc_id,
-       octet_length(encode(text)) AS n_bytes,
-       length(text) AS n_chars_txt,
-       octet_length(encode(text)) > length(text) AS is_multibyte
-FROM documents
-"""
-
-
 SQL_TEXT_LANGID = r"""
 WITH padded AS (
   SELECT doc_id, lang, lower(text) AS t FROM documents
@@ -214,6 +194,10 @@ def q_text_repetition(spark, sf_dir):
     return text_ops.repetition_features(docs, top_ns=(2, 3), dup_ns=(5,))
 
 
+# Groups exact gram strings, while the engine keys grams by (64-bit
+# hash, length): a hash collision (bound in
+# ``text.repetition_features``'s docstring) shows up here as a mismatch
+# in one document's fractions.
 SQL_TEXT_REPETITION = r"""
 WITH toks AS (
   SELECT doc_id,

@@ -13,15 +13,6 @@ from kiji_mapreduce_spark.pipeline.dedup import tokens
 from kiji_mapreduce_spark.suite.common import _emb, _t
 
 
-def q_knn_cosine_topk(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5)
-    out = similarity.brute_force_topk(emb, queries, k=5)
-    return out.select("query_id", "neighbor_id",
-                      (F.round("cosine", 4) + F.lit(0.0)).alias("cosine"),
-                      "rank")
-
-
 SQL_KNN_COSINE = """
 WITH q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv

@@ -39,23 +39,8 @@ from kiji_mapreduce_spark.suite.queries_text import _BM25_QUERIES
 # any query 2+ rounds stale (or never verified) sits outside this window
 # (r5 verdict ask #1).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # -- r14 rotation, per the r13 judge's ruling (VERDICT r13 next
-    #    #1): versioned_latest_event_value and entity_key_hash are
-    #    RETIRED (judge-endorsed — the slicing path stays driver-hashed
-    #    via versioned_slice_maxversions + map_family_regex_filter, the
-    #    scalar-SQL family via sql_surface_big_spenders +
-    #    text_token_count, and RowKeySpec.pack's hard part, the
-    #    prefix-free escape, stays pinned by the hypothesis injectivity
-    #    property; both q_ functions and SQL constants remain defined
-    #    for tests). The two freed slots seat the staged oracles
-    #    dedup_exact_substring and robots_filter (new-first policy;
-    #    both committed hash-matching vs DuckDB at sf0.001 AND sf0.01
-    #    since r13 — tests/test_exact_substring_oracle.py,
-    #    tests/test_robots_oracle.py), and dsir_log_weights takes the
-    #    window slot its expiring r13 NEW_PENDING exemption mandated.
-    #    Window = the 2 new seats + dsir_log_weights + the 47 remaining
-    #    r12-green tail queries at the 2-round freshness cap
-    #    (stalest-first, tools/update_verified.py's emitted order). --
+    # -- A query leaves the registry only by an endorsed retirement,
+    #    and its q_ function and oracle SQL leave the package with it. --
     "dedup_exact_substring": q_dedup_exact_substring,
     "robots_filter": q_robots_filter,
     "dsir_log_weights": q_dsir_log_weights,
@@ -226,45 +211,9 @@ FIRST_WINDOW_REQUIRED: list[str] = [
     "text_token_count",
 ]
 
-# r14 round-start note: registry 100 -> 100 (retired
-# versioned_latest_event_value + entity_key_hash per the r13 judge's
-# ruling; seated dedup_exact_substring + robots_filter in the window
-# from the staged oracles, and dsir_log_weights took its mandated
-# window slot). Ledger regenerated to as_of_round: 13
-# (tools/update_verified.py) before the rotation; update_verified's
-# required set (2 never-verified seats + dsir + 47 r12-green) fills
-# the window with zero slack, exactly the judge's arithmetic.
-#
-# r15 planning: the tail's 50 r13-green queries all hit the freshness
-# cap in r15, so the window is again fully determined — zero slack.
-# THREE transplant-ready oracle seats are staged with committed,
-# hash-matching DuckDB cross-checks, per the C4/DSIR precedent:
-#   (a) main_content — q_main_content + SQL_MAIN_CONTENT
-#       (tests/test_main_content_oracle.py; exact at both sfs) — the
-#       WSDM-2010 densitometric tree replayed via lag/lead;
-#   (b) semantic_dedup — q_semantic_dedup + SQL_SEMANTIC_DEDUP
-#       (tests/test_semantic_dedup_oracle.py; exact at both sfs) —
-#       the full SemDeDup chain with a recursive-CTE closure;
-#   (c) hybrid_search_rrf (r14) — q_hybrid_search_rrf +
-#       SQL_HYBRID_RRF (tests/test_hybrid_rrf_oracle.py; exact at
-#       both sfs) — BM25 + exact-cosine fused by Reciprocal Rank
-#       Fusion (Cormack et al., SIGIR 2009), the text+vector hybrid
-#       retrieval shape.
-# Seating any needs a judge-endorsed retirement. Strongest
-# candidates, for the judge to rule on (NOT retired unilaterally):
-#   (1) cube_order_stats — the grouping-sets family keeps TWO other
-#       driver-hashed members (rollup_revenue, grouping_sets_orders —
-#       the general form), all three thin wrappers over the same
-#       Catalyst expand;
-#   (2) semi_join_customers_with_orders — the containsKey-semantics
-#       pair's EASY half (anti_join_customers_without_orders keeps
-#       the trickier NULL-handling side driver-hashed, and the
-#       kvstore lookup path stays covered by kvstore_lookup_join);
-#   (3) sample_stratum_topk — a thin compose of the per-stratum
-#       hash-rank machinery that sample_stratified (same
-#       _key_unit/seed path) and salted_topk_events (the rank-window
-#       form, skew-salted) both keep driver-hashed; its own
-#       deterministic-reservoir contract stays pytest-pinned.
+# The window has zero slack (every tail query sits at the 2-round
+# freshness cap), so seating a STAGED query below means retiring a
+# registry query first.
 
 #: Queries added MID-ROUND when the window had zero slack (displacing
 #: any member would breach the 2-round freshness cap). Each maps to the
@@ -280,7 +229,7 @@ FIRST_WINDOW_REQUIRED: list[str] = [
 NEW_PENDING_WINDOW: dict[str, int] = {}
 
 #: Transplant-ready seat candidates NOT in QUERIES (seating needs a
-#: judge-endorsed retirement — see the r15 planning comment above).
+#: retirement — see the window note above).
 #: Kept OUT of QUERIES so the driver window, bench set, and the
 #: freshness ledger are untouched, but enumerable so plan_lint lints
 #: their plans every round and check_correctness drives them BY NAME

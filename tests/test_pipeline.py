@@ -1107,19 +1107,6 @@ def test_pagerank_matches_numpy_power_iteration(spark):
         assert abs(got[v] - r[idx[v]]) < 1e-9, (v, got[v], r[idx[v]])
 
 
-def test_repeated_ngram_coverage_unmaterialized_matches(spark):
-    """materialize_grams=False (the very-large-corpus path) must be
-    result-identical to the checkpointed default."""
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c x y"), (3, "")],
-        "doc_id long, text string")
-    a = sorted(map(tuple, dedup.repeated_ngram_coverage(
-        df, n=3, min_docs=2).collect()))
-    b = sorted(map(tuple, dedup.repeated_ngram_coverage(
-        df, n=3, min_docs=2, materialize_grams=False).collect()))
-    assert a == b
-
-
 def test_countmin_never_undercounts_and_exact_when_sparse(spark):
     """CMS invariants: estimate >= exact for EVERY value (min over rows
     of summed cells can only overcount); with width >> distinct values,
@@ -2629,6 +2616,35 @@ def test_filter_blocked(spark):
 
     with _pytest.raises(ValueError, match="invalid URL"):
         filter_blocked(docs, spark, url_patterns=["(unbalanced"])
+    # ...also with a domain list, whose pin must not run first
+    sc = spark.sparkContext
+    sc.setJobGroup("filter-blocked-invalid", "filter-blocked-invalid")
+    try:
+        with _pytest.raises(ValueError, match="invalid URL"):
+            filter_blocked(docs, spark, blocked_domains=["ads.example.com"],
+                           url_patterns=["(unbalanced"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup("filter-blocked-invalid")
+
+
+def test_filter_blocked_pins_domain_diamond(spark, tmp_path):
+    """With a domain list, both anti-join sides read one checkpointed
+    relation instead of scanning the source twice."""
+    from kiji_mapreduce_spark.pipeline.crawl import filter_blocked
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(1, "ads.example.com", "http://ads.example.com/x"),
+         (2, "news.example.org", "http://news.example.org/a")],
+        "doc_id long, domain string, url string").write.parquet(path)
+    out = filter_blocked(spark.read.parquet(path), spark,
+                         blocked_domains=["ads.example.com"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan
+    assert plan.count("Scan ExistingRDD") == 2
+    assert {r.doc_id for r in out.collect()} == {2}
 
 
 def test_compressibility_signal(spark):
@@ -2655,7 +2671,7 @@ def test_compressibility_signal(spark):
 
     cfg = cur_mod.CurateConfig(min_quality=0.0,
                                compress_ratio_bounds=(0.2, 0.95))
-    out = cur_mod.curate_corpus(docs, config=cfg, materialize=False)
+    out = cur_mod.curate_corpus(docs, config=cfg)
     ids = {r.doc_id for r in out.collect()}
     assert 1 not in ids      # templated spam gated out
     assert 2 in ids          # prose survives
@@ -2690,14 +2706,12 @@ def test_best_survivors_quality_policy(spark):
         "doc_id long, text string, lang string")
     keep_min = cur_mod.curate_corpus(
         corpus, config=cur_mod.CurateConfig(
-            min_quality=0.0, near_threshold=0.5),
-        materialize=False)
+            min_quality=0.0, near_threshold=0.5))
     assert {r.doc_id for r in keep_min.collect()} == {1, 3}
     keep_best = cur_mod.curate_corpus(
         corpus, config=cur_mod.CurateConfig(
             min_quality=0.0, near_threshold=0.5,
-            survivor_by_quality=True),
-        materialize=False)
+            survivor_by_quality=True))
     assert {r.doc_id for r in keep_best.collect()} == {2, 3}
 
 
@@ -3931,17 +3945,3 @@ def test_kmeans_assign_backfills_ragged_seed_candidates(spark):
     assert set(got) == {1, 3, 4}
     assert got[3] == got[4] != got[1]
 
-
-def test_split_leakage_materialize_off_matches_on(spark):
-    """The r15 digest-table pin must be a pure execution-shape change:
-    materialize=False (fully lazy) and the default eager checkpoint
-    return identical leak tables."""
-    from kiji_mapreduce_spark import audit
-
-    rows = [(i, "train" if i % 3 else "val", i % 5) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, split string, _d long")
-    on = sorted(tuple(r) for r in audit.split_leakage(
-        df, digest_col="_d").collect())
-    off = sorted(tuple(r) for r in audit.split_leakage(
-        df, digest_col="_d", materialize=False).collect())
-    assert on == off

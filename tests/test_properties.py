@@ -1818,7 +1818,5 @@ def test_exact_substring_dedup_matches_model(spark, texts):
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: (r.text, r.tokens_dropped)
-           for r in dedup.exact_substring_dedup(df, min_tokens=2,
-                                                materialize=False)
-           .collect()}
+           for r in dedup.exact_substring_dedup(df, min_tokens=2).collect()}
     assert got == _model_exact_substring(rows, 2)

@@ -230,3 +230,22 @@ def test_widen_narrow_scan_widens_and_skips(spark):
         assert cached is narrow
     finally:
         common._SCAN_PARTS_CACHE.pop(key, None)
+
+
+def test_widened_scan_cache_sees_rewritten_fixture(spark, tmp_path):
+    """A fixture rewritten with more files within one application is
+    measured again: the scan-partition cache keys on file mtime/size."""
+    from kiji_mapreduce_spark.suite import common
+
+    target = common.compute_parallel_target(spark)
+    path = str(tmp_path / "documents.parquet")
+
+    def widened():
+        df = common._t_widened(spark, str(tmp_path), "documents", "id")
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    spark.range(100).coalesce(1).write.parquet(path)
+    assert "Exchange" in widened()  # one file -> repartitioned
+    spark.range(100).repartition(target + 2).write.mode(
+        "overwrite").parquet(path)
+    assert "Exchange" not in widened()  # now wide enough: no shuffle
