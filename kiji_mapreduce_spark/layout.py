@@ -243,8 +243,9 @@ class RowKeySpec:
     @staticmethod
     def pack(string_cols) -> "F.Column":
         """Escape + join already-cast string components — shared by
-        ``key_expr`` and the point-lookup bucket router in
-        ``EntityTable._bucket_of`` so both always produce identical
+        ``key_expr`` and ``EntityTable.get``, which packs its key
+        literals for the shared bucket expression
+        ``EntityTable._bucket_for``, so both always produce identical
         packed keys. Escape-char first, then the separator byte: the
         reverse order would double-escape."""
         cols = [F.coalesce(

@@ -489,23 +489,8 @@ def table_change_stream(table, include_bucket: bool = False) -> DataFrame:
     ``cleanSource`` semantics. (The 100 TB deployment runs flushes from
     the same scheduler as the subscribers, so ordering is explicit.)
     """
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType)
-
-    # the put-fragment contract written by put_delta: addressing +
-    # string-encoded value + fragment seq + bucket partition column
-    schema = StructType([
-        StructField("entity_id", table.layout.row_key.spark_type()),
-        StructField("family", StringType()),
-        StructField("qualifier", StringType()),
-        StructField("ts", LongType()),
-        StructField("value_str", StringType()),
-        StructField("_seq", LongType()),
-        StructField("_batch", LongType()),
-        StructField("_bucket", IntegerType()),
-    ])
     reader = (table.spark.readStream
-              .schema(schema)
+              .schema(table._delta_schema())  # the put_delta contract
               .option("maxFilesPerTrigger", 64)
               .parquet(table._delta_path())
               .drop("_batch"))  # write-side replay bookkeeping

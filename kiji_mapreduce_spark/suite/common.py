@@ -60,21 +60,25 @@ def _ensure_session_conf(spark: SparkSession) -> None:
         pass  # workers already have the package (e.g. installed/PYTHONPATH)
 
 
-#: (applicationId, path) -> inferred StructType. Schema METADATA only —
-#: never data, plans, or results: every action still scans the parquet
-#: files. Rationale (optimization guide §1/§6): each bare
-#: ``spark.read.parquet`` call pays a driver-side footer-inference job
-#: (~130 ms measured at sf0.1), and the suite re-resolves the same
-#: static driver tables hundreds of times per bench sweep; a catalog
-#: would cache exactly this. Keyed on applicationId so a new session
-#: (or a driver-owned session) re-infers once.
+#: (applicationId, path, st_mtime_ns, st_size) -> inferred StructType.
+#: Schema METADATA only — never data, plans, or results: every action
+#: still scans the parquet files. Rationale (optimization guide §1/§6):
+#: each bare ``spark.read.parquet`` call pays a driver-side
+#: footer-inference job (~130 ms measured at sf0.1), and the suite
+#: re-resolves the same static driver tables hundreds of times per bench
+#: sweep; a catalog would cache exactly this. Keyed on applicationId so
+#: a new session (or a driver-owned session) re-infers once, and on the
+#: file's mtime and size so a fixture rewritten in one session (say,
+#: with an extra column) is inferred again instead of read stale.
 _SCHEMA_CACHE: dict = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path)
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, path, st.st_mtime_ns,
+           st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

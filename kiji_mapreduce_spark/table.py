@@ -16,11 +16,19 @@ did for the reference (SURVEY.md §4 "genuinely custom" item 1).
 from __future__ import annotations
 
 import os
+import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType, IntegerType, MapType, StructField, StructType,
+)
 
 from kiji_mapreduce_spark import cells as cell_fns
-from kiji_mapreduce_spark.io.outputs import bulk_load, swap_partition_dirs
+from kiji_mapreduce_spark.io.outputs import (
+    bulk_load, fs_delete, fs_exists, fs_listdir, swap_partition_dirs,
+)
 from kiji_mapreduce_spark.layout import TableLayout
 
 _LAYOUT_FILE = "_kiji_layout.json"
@@ -30,11 +38,23 @@ def _parse_value(value_str, value_type):
     """Decode a put's string value to the column's declared type: plain
     cast for primitives, JSON for record/array/map cells (the Avro-decode
     step of the reference's put path collapsed to from_json)."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
     if isinstance(value_type, (StructType, ArrayType, MapType)):
         return F.from_json(value_str, value_type)
     return value_str.cast(value_type)
+
+
+def _rebuild_group(fam, cell_fn, keep_null: bool):
+    """Group family ``fam`` rebuilt in one struct: column ``c`` becomes
+    ``cell_fn(c, cells)``, where ``cells`` is read from the family's
+    ORIGINAL value. The expression grows linearly with the column count
+    (a chain of per-field struct updates re-reads the struct updated so
+    far, doubling the analyzed plan per column). A NULL family becomes a struct of the
+    per-column results (NULL cells where ``cell_fn`` leaves them NULL),
+    or stays NULL with ``keep_null``."""
+    family = F.col(fam.name)
+    out = F.struct(*[cell_fn(c, family[c.name]).alias(c.name)
+                     for c in fam.columns])
+    return F.when(family.isNotNull(), out) if keep_null else out
 
 
 class EntityTable:
@@ -70,40 +90,64 @@ class EntityTable:
     def _data_path(self) -> str:
         return os.path.join(self.path, "data")
 
-    def _physical_schema(self):
-        from pyspark.sql.types import IntegerType
+    def _physical_schema(self) -> StructType:
+        return self.layout.spark_schema().add("_bucket", IntegerType(), False)
 
-        schema = self.layout.spark_schema()
-        return schema.add("_bucket", IntegerType(), False)
+    def _entity_schema(self, *cols: tuple[str, str]) -> StructType:
+        """``entity_id`` (the row-key struct, components nullable so a
+        client's struct casts to it) followed by ``cols``."""
+        key = StructType([StructField(f.name, f.dataType)
+                          for f in self.layout.row_key.spark_type()])
+        schema = StructType().add("entity_id", key)
+        for name, dtype in cols:
+            schema = schema.add(name, dtype)
+        return schema
+
+    def _delta_schema(self) -> StructType:
+        """The delta log's fragment contract: the five put columns, the
+        ``_seq`` data column and the ``_batch``/``_bucket`` partition
+        columns. ``put_delta`` writes exactly this; ``_read_delta`` and
+        ``streaming.jobs.table_change_stream`` read with it."""
+        return self._entity_schema(
+            ("family", "string"), ("qualifier", "string"), ("ts", "long"),
+            ("value_str", "string"), ("_seq", "long"), ("_batch", "long"),
+            ("_bucket", "integer"))
+
+    def _delete_schema(self) -> StructType:
+        """Staged tombstones: what ``bulk_stage`` writes and
+        ``bulk_commit`` reads back (the ``merge_delete`` columns)."""
+        return self._entity_schema(
+            ("family", "string"), ("qualifier", "string"),
+            ("upto_ts", "long"))
+
+    def _read_base(self) -> DataFrame:
+        """The base files, read with the layout as reader schema: no
+        footer-inference job, and a data dir without footers (created
+        empty, or every row deleted) reads as empty."""
+        return self.spark.read.schema(self._physical_schema()).parquet(
+            self._data_path())
+
+    def _bucket_for(self, packed):
+        """Key bucket of a packed key (``RowKeySpec.pack``), the analogue
+        of region assignment; co-locates a key's writes and enables
+        bucket-pruned point lookups. On literals it folds to a constant,
+        so ``get`` routes without running anything."""
+        return F.pmod(F.crc32(self.layout.row_key.hash_of(packed)),
+                      F.lit(self.n_buckets)).cast("int")
 
     def _bucket_expr(self):
-        """Deterministic key bucket from the row-key hash — the analogue of
-        region assignment; co-locates a key's writes and enables
-        bucket-pruned point lookups."""
-        return F.pmod(
-            F.crc32(self.layout.row_key.hash_expr()), F.lit(self.n_buckets)
-        ).cast("int")
+        return self._bucket_for(self.layout.row_key.key_expr())
 
     # -- read ---------------------------------------------------------------
     def read(self, merge_deltas: bool = True) -> DataFrame:
-        """Logical table scan. When a delta log exists the scan is the
-        merge-on-read view (base + fragments, ``_merge_view``);
-        ``merge_deltas=False`` is the read-optimized view (base files
-        only — what a flushed table always serves)."""
-        try:
-            base = self.spark.read.parquet(self._data_path()).drop("_bucket")
-        except Exception as e:
-            # a table whose last rows were deleted (or a created-but-
-            # never-written table) has a data dir with no parquet
-            # footers — serve the layout's empty schema instead of an
-            # unreadable table (r5 review finding)
-            msg = str(e)
-            if ("UNABLE_TO_INFER_SCHEMA" not in msg
-                    and "Unable to infer schema" not in msg):
-                raise
-            base = self.spark.createDataFrame(
-                [], self.layout.spark_schema())
-        if merge_deltas and self._has_deltas():
+        """Logical table scan; runs no Spark job when called. Base and
+        delta files are read with the layout as reader schema
+        (``_read_base``, ``_delta_schema``). When a delta log exists the
+        scan is the merge-on-read view (base + fragments,
+        ``_merge_view``); ``merge_deltas=False`` is the read-optimized
+        view (base files only — what a flushed table always serves)."""
+        base = self._read_base().drop("_bucket")
+        if merge_deltas and self._delta_buckets():
             return self._merge_view(base, self._read_delta().drop("_bucket"))
         return base
 
@@ -148,6 +192,12 @@ class EntityTable:
             df = data_request.apply(df)
         return df
 
+    def _project(self, df: DataFrame, exprs: dict) -> DataFrame:
+        """One select of the layout's columns, ``exprs`` replacing the
+        named ones."""
+        return df.select(*[exprs[n].alias(n) if n in exprs else F.col(n)
+                           for n in self.layout.spark_schema().names])
+
     def _key_literals(self, components) -> list:
         """Typed literal expressions for entity-id components — every
         comparison/rendering happens with Spark's own casts, so bool,
@@ -162,35 +212,23 @@ class EntityTable:
         return [F.lit(v).cast(f.dataType)
                 for f, v in zip(fields, components)]
 
-    def _bucket_of(self, lits) -> int:
-        """Bucket id for a point lookup, computed by the SAME Spark
-        expression pipeline as the write path (one 1-row local job —
-        constant cost, no table scan)."""
-        packed = self.layout.row_key.pack([l.cast("string") for l in lits])
-        expr = F.pmod(
-            F.crc32(self.layout.row_key.hash_of(packed)),
-            F.lit(self.n_buckets)).cast("int")
-        return self.spark.range(1).select(expr.alias("b")).first()["b"]
-
     def get(self, *components) -> DataFrame:
-        """Point lookup by entity-id components: computes the key's
-        bucket and filters on the partition column first, so the scan
-        prunes to one bucket directory before touching row data. With a
-        delta log present, the same bucket-pruned filter runs on the
-        (tiny) fragment set and the merge applies to this one key."""
+        """Point lookup by entity-id components; runs no Spark job when
+        called. The key's bucket is ``_bucket_for`` over the typed
+        literals, which Catalyst folds into a literal partition filter,
+        so the scan prunes to one bucket directory before touching row
+        data. Base and fragments are read with the layout as reader
+        schema. With a delta log present, the same bucket-pruned filter
+        runs on the (tiny) fragment set and the merge applies to this
+        one key."""
         lits = self._key_literals(components)
-        bucket = self._bucket_of(lits)
-        cond = F.lit(True)
+        cond = F.col("_bucket") == self._bucket_for(
+            self.layout.row_key.pack([l.cast("string") for l in lits]))
         for f, lit in zip(self.layout.row_key.spark_type().fields, lits):
             cond = cond & (F.col(f"entity_id.{f.name}").eqNullSafe(lit))
-        raw = self.spark.read.parquet(self._data_path())
-        if "_bucket" in raw.columns:
-            raw = raw.filter(F.col("_bucket") == bucket)
-        row = raw.filter(cond).drop("_bucket")
-        if self._has_deltas():
-            frags = (self._read_delta()
-                     .filter(F.col("_bucket") == bucket)
-                     .filter(cond).drop("_bucket"))
+        row = self._read_base().filter(cond).drop("_bucket")
+        if self._delta_buckets():
+            frags = self._read_delta().filter(cond).drop("_bucket")
             return self._apply_puts(row, frags)
         return row
 
@@ -204,8 +242,6 @@ class EntityTable:
         Scheme-agnostic: a local glob on an hdfs://s3a:// table would
         always come up empty and silently degrade every merge to a
         full-table overwrite (r5 review finding)."""
-        from kiji_mapreduce_spark.io.outputs import fs_exists, fs_listdir
-
         data = self._data_path()
         if not fs_exists(data, self.spark):
             return False
@@ -214,8 +250,8 @@ class EntityTable:
 
     def _read_buckets(self, buckets: list[int]) -> DataFrame:
         """Partition-pruned read of only the given bucket directories."""
-        raw = self.spark.read.parquet(self._data_path())
-        return raw.filter(F.col("_bucket").isin(list(buckets))).drop("_bucket")
+        return (self._read_base()
+                .filter(F.col("_bucket").isin(list(buckets))).drop("_bucket"))
 
     def _affected_buckets(self, df: DataFrame) -> list[int]:
         """Distinct bucket ids touched by incoming puts/deletes/rows —
@@ -253,14 +289,20 @@ class EntityTable:
         this is the difference between a seconds-long upsert and a full
         table job; writers touching disjoint buckets don't conflict.
         """
-        import uuid
-
         staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:8]}")
         self._write_canonical(df, staging, n_partitions=max(len(buckets), 1),
                               max_records_per_file=max_records_per_file)
         swap_partition_dirs(
             staging, self._data_path(), [f"_bucket={b}" for b in buckets],
             spark=self.spark)
+
+    def _commit(self, result: DataFrame, buckets: list[int] | None) -> None:
+        """Write ``result``: the new contents of ``buckets``, or of the
+        whole table when ``buckets`` is None."""
+        if buckets is None:
+            self.overwrite(result)
+        else:
+            self._rewrite_buckets(result, buckets)
 
     def overwrite(self, df: DataFrame) -> None:
         """Replace table contents, physically partitioned by key bucket
@@ -272,15 +314,11 @@ class EntityTable:
         (bulk_load), so concurrent readers never see a half-written
         table — the same commit discipline as the HFile path.
         """
-        import uuid
-
         staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:8]}")
         self._write_canonical(df, staging)
         bulk_load(staging, self._data_path())
         # replace semantics: buffered fragments described the old contents
-        import shutil as _shutil
-
-        _shutil.rmtree(self._delta_path(), ignore_errors=True)
+        shutil.rmtree(self._delta_path(), ignore_errors=True)
 
     def _apply_puts(self, current: DataFrame, puts: DataFrame) -> DataFrame:
         """The put-merge transformation: fold put fragments into the
@@ -314,9 +352,8 @@ class EntityTable:
         )
         merged = current.withColumn("_k", key_expr_cur).join(
             grouped, on="_k", how="full_outer")
-        # seed brand-new rows with their entity_id and null families
-        merged = merged.withColumn(
-            "entity_id", F.coalesce(F.col("entity_id"), F.col("_eid")))
+        # brand-new rows take their entity_id from the puts
+        exprs = {"entity_id": F.coalesce(F.col("entity_id"), F.col("_eid"))}
         for fam in self.layout.families:
             if fam.kind == "map":
                 # dynamic qualifiers: fold puts into the map, one
@@ -331,7 +368,7 @@ class EntityTable:
                     F.col(fam.name),
                     F.map_from_arrays(F.array(), F.array()).cast(
                         fam.spark_type()))
-                updated_map = F.aggregate(
+                exprs[fam.name] = F.aggregate(
                     matching,
                     base_map,
                     lambda acc, p: F.map_concat(
@@ -343,35 +380,23 @@ class EntityTable:
                                 p["ts"],
                                 _parse_value(p["value_str"], value_type)))),
                 )
-                merged = merged.withColumn(fam.name, updated_map)
                 continue
-            fam_struct = F.col(fam.name)
-            # null family struct on fresh rows -> struct of null cells
-            fam_struct = F.coalesce(fam_struct, F.struct(*[
-                F.lit(None).cast(
-                    self.layout.family(fam.name).spark_type()[c.name].dataType
-                ).alias(c.name)
-                for c in fam.columns
-            ]))
-            for col in fam.columns:
+
+            def put_cells(col, cells):
+                value_type = (fam.spark_type()[col.name]
+                              .dataType.elementType["value"].dataType)
                 matching = F.filter(
                     F.col("_puts"),
                     lambda p: (p["family"] == fam.name)
-                    & (p["qualifier"] == col.name),
-                )
-                value_type = (
-                    self.layout.family(fam.name).spark_type()
-                    [col.name].dataType.elementType["value"].dataType
-                )
-                updated = F.aggregate(
-                    F.coalesce(matching, F.array()),
-                    fam_struct[col.name],
+                    & (p["qualifier"] == col.name))
+                return F.aggregate(
+                    F.coalesce(matching, F.array()), cells,
                     lambda acc, p: cell_fns.put_cell(
-                        acc, p["ts"], _parse_value(p["value_str"], value_type)),
-                )
-                fam_struct = fam_struct.withField(col.name, updated)
-            merged = merged.withColumn(fam.name, fam_struct)
-        return merged.select(*[f.name for f in self.layout.spark_schema()])
+                        acc, p["ts"], _parse_value(p["value_str"], value_type)))
+
+            # a NULL family on a fresh row becomes a struct of cells
+            exprs[fam.name] = _rebuild_group(fam, put_cells, keep_null=False)
+        return self._project(merged, exprs)
 
     def merge_put(self, puts: DataFrame) -> None:
         """Upsert cell versions into the table (the direct-writer path).
@@ -392,39 +417,36 @@ class EntityTable:
                    if self._is_bucket_partitioned() else None)
         current = self.read() if buckets is None else self._read_buckets(buckets)
         result = self._apply_puts(current, puts)
-        if buckets is None:
-            self.overwrite(result)
-        else:
-            self._rewrite_buckets(result, buckets)
+        self._commit(result, buckets)
 
     # -- delta (LSM) write path --------------------------------------------
     def _delta_path(self) -> str:
         return os.path.join(self.path, "delta")
 
-    def _has_deltas(self) -> bool:
-        # scheme-agnostic: local glob on a remote-scheme table would
-        # always answer False, making acknowledged put_delta writes
-        # invisible to read() forever (r5 review finding)
-        from kiji_mapreduce_spark.io.outputs import fs_exists, fs_listdir
-
+    def _delta_buckets(self) -> list[int]:
+        """Bucket ids holding pending fragments, read off the log's
+        ``_batch=*/_bucket=*`` listing (scheme-agnostic: a local glob on
+        a remote-scheme table would always come up empty, making
+        acknowledged put_delta writes invisible). Runs no Spark job."""
         delta = self._delta_path()
         if not fs_exists(delta, self.spark):
-            return False
+            return []
+        buckets = set()
         for n in fs_listdir(delta, self.spark):
             if not n.startswith("_batch="):
                 continue
             for m in fs_listdir(os.path.join(delta, n), self.spark):
-                if m.startswith("_bucket="):
-                    sub = os.path.join(delta, n, m)
-                    if any(f.endswith(".parquet")
-                           for f in fs_listdir(sub, self.spark)):
-                        return True
-        return False
+                if m.startswith("_bucket=") and any(
+                        f.endswith(".parquet") for f in
+                        fs_listdir(os.path.join(delta, n, m), self.spark)):
+                    buckets.add(int(m.split("=", 1)[1]))
+        return sorted(buckets)
 
     def _read_delta(self) -> DataFrame:
         # _batch is write-side replay bookkeeping (see put_delta);
         # fragment ordering travels as the _seq data column
-        return self.spark.read.parquet(self._delta_path()).drop("_batch")
+        return (self.spark.read.schema(self._delta_schema())
+                .parquet(self._delta_path()).drop("_batch"))
 
     def put_delta(self, puts: DataFrame,
                   batch_id: int | None = None) -> None:
@@ -453,13 +475,16 @@ class EntityTable:
         without it, duplicating the change feed on replay). Without
         ``batch_id`` each call appends under a fresh ``time_ns`` seq.
 
-        Reads prune ``_bucket`` exactly as the base does. Single-writer
-        discipline assumed (same as the base write path).
+        Fragments are written in exactly ``_delta_schema``: the five
+        put columns are selected and cast to it (other columns of
+        ``puts`` are dropped), so every reader of the log can name its
+        schema instead of inferring it. Reads prune ``_bucket`` exactly
+        as the base does. Single-writer discipline assumed (same as the
+        base write path).
         """
-        import time as _time
-
-        seq = _time.time_ns() if batch_id is None else int(batch_id)
-        frag = (puts
+        seq = time.time_ns() if batch_id is None else int(batch_id)
+        frag = (puts.select(*[F.col(f.name).cast(f.dataType)
+                              for f in self._delta_schema().fields[:5]])
                 .withColumn("_seq", F.lit(seq).cast("long"))
                 .withColumn("_batch", F.lit(seq).cast("long"))
                 .withColumn("_bucket", self._bucket_expr()))
@@ -473,16 +498,16 @@ class EntityTable:
 
     def flush_deltas(self) -> list[int]:
         """Fold every delta fragment into its base bucket (bucket-scoped
-        rewrite) and clear the delta log. Returns the buckets rewritten.
-        No-op when the log is empty — every base-mutating operator calls
-        this first, so base mutations always see linear history."""
-        import shutil as _shutil
-
-        if not self._has_deltas():
+        rewrite) and clear the delta log. Returns the buckets rewritten:
+        the ``_bucket=`` ids listed under the log (``_delta_buckets``),
+        so no job runs to find them. No-op when the log is empty —
+        every base-mutating operator calls this first, so base mutations
+        always see linear history."""
+        buckets = self._delta_buckets()
+        if not buckets:
             return []
         puts = self._read_delta().drop("_bucket")
         if self._is_bucket_partitioned():
-            buckets = self._affected_buckets(puts)
             current = self._read_buckets(buckets)
         else:
             buckets = None
@@ -490,12 +515,9 @@ class EntityTable:
         # the merged rows must be computed BEFORE the swap replaces the
         # base files the plan reads from
         result = self._apply_puts(current, puts).localCheckpoint(eager=True)
-        if buckets is None:
-            self.overwrite(result)
-        else:
-            self._rewrite_buckets(result, buckets)
-        _shutil.rmtree(self._delta_path(), ignore_errors=True)
-        return buckets if buckets is not None else []
+        self._commit(result, buckets)
+        shutil.rmtree(self._delta_path(), ignore_errors=True)
+        return buckets or []
 
     def _merge_view(self, base: DataFrame, puts: DataFrame) -> DataFrame:
         """Merge-on-read: apply delta fragments to the base scan without
@@ -529,10 +551,7 @@ class EntityTable:
             incoming_keys, on="_k", how="left_anti").drop("_k")
         cols = [f.name for f in self.layout.spark_schema()]
         result = kept.select(*cols).unionByName(rows.select(*cols))
-        if buckets is None:
-            self.overwrite(result)
-        else:
-            self._rewrite_buckets(result, buckets)
+        self._commit(result, buckets)
 
     def increment(self, increments: DataFrame) -> None:
         """Counter increment (``KijiTableWriter.increment``; counter
@@ -574,8 +593,7 @@ class EntityTable:
         merged = current.withColumn(
             "_k", self.layout.row_key.key_expr()).join(
             grouped, on="_k", how="full_outer")
-        merged = merged.withColumn(
-            "entity_id", F.coalesce(F.col("entity_id"), F.col("_eid")))
+        exprs = {"entity_id": F.coalesce(F.col("entity_id"), F.col("_eid"))}
 
         def bumped(cells, matching):
             """One new version: latest (or 0) + sum(deltas) @ max ts."""
@@ -612,25 +630,19 @@ class EntityTable:
                                 bumped(F.try_element_at(out, F.lit(q)),
                                        matching)))
                     ).otherwise(out)
-                merged = merged.withColumn(fam.name, out)
+                exprs[fam.name] = out
                 continue
-            fam_struct = F.coalesce(F.col(fam.name), F.struct(*[
-                F.lit(None).cast(fam.spark_type()[c.name].dataType)
-                .alias(c.name) for c in fam.columns]))
-            for col in fam.columns:
+
+            def bump_cells(col, cells):
                 if (fam.name, col.name) not in refs:
-                    continue
-                matching = F.filter(
+                    return cells
+                return bumped(cells, F.filter(
                     incs, lambda i: (i["family"] == fam.name)
-                    & (i["qualifier"] == col.name))
-                fam_struct = fam_struct.withField(
-                    col.name, bumped(fam_struct[col.name], matching))
-            merged = merged.withColumn(fam.name, fam_struct)
-        result = merged.select(*[f.name for f in self.layout.spark_schema()])
-        if buckets is None:
-            self.overwrite(result)
-        else:
-            self._rewrite_buckets(result, buckets)
+                    & (i["qualifier"] == col.name)))
+
+            exprs[fam.name] = _rebuild_group(fam, bump_cells, keep_null=False)
+        result = self._project(merged, exprs)
+        self._commit(result, buckets)
 
     def merge_delete(self, deletes: DataFrame) -> None:
         """Apply tombstones (DirectKijiTableWriterContext semantics,
@@ -677,29 +689,20 @@ class EntityTable:
                 )
             return F.filter(cells_col, lambda c: ~covered(c))
 
+        exprs = {}
         for fam in self.layout.families:
             if fam.kind == "map":
-                merged = merged.withColumn(
-                    fam.name,
-                    F.map_filter(
-                        F.transform_values(
-                            F.col(fam.name),
-                            lambda k, v: apply_cell_deletes(v, fam.name, k)),
-                        lambda k, v: F.size(v) > 0),
-                )
+                exprs[fam.name] = F.map_filter(
+                    F.transform_values(
+                        F.col(fam.name),
+                        lambda k, v: apply_cell_deletes(v, fam.name, k)),
+                    lambda k, v: F.size(v) > 0)
                 continue
-            fam_struct = F.col(fam.name)
-            for col in fam.columns:
-                fam_struct = fam_struct.withField(
-                    col.name,
-                    apply_cell_deletes(
-                        fam_struct[col.name], fam.name, F.lit(col.name)))
-            merged = merged.withColumn(fam.name, fam_struct)
-        result = merged.select(*[f.name for f in self.layout.spark_schema()])
-        if buckets is None:
-            self.overwrite(result)
-        else:
-            self._rewrite_buckets(result, buckets)
+            exprs[fam.name] = _rebuild_group(
+                fam, lambda col, cells: apply_cell_deletes(
+                    cells, fam.name, F.lit(col.name)), keep_null=True)
+        result = self._project(merged, exprs)
+        self._commit(result, buckets)
 
     def bulk_stage(self, df: DataFrame | None, staging_path: str,
                    max_records_per_file: int | None = None,
@@ -720,8 +723,6 @@ class EntityTable:
         if df is None and deletes is None:
             raise ValueError("bulk_stage needs rows, deletes, or both")
         if df is not None:
-            from kiji_mapreduce_spark.io.outputs import fs_exists
-
             if fs_exists(staging_path.rstrip("/") + "/_deletes",
                          self.spark):
                 # the row write overwrites the staging root, which would
@@ -736,8 +737,10 @@ class EntityTable:
         if deletes is not None:
             # Spark's writer creates parent dirs on any scheme; only mark
             # the staging root for the pure-delete local case
-            deletes.write.mode("overwrite").parquet(
-                staging_path.rstrip("/") + "/_deletes")
+            deletes.select(*[F.col(f.name).cast(f.dataType)
+                             for f in self._delete_schema()]) \
+                .write.mode("overwrite").parquet(
+                    staging_path.rstrip("/") + "/_deletes")
 
     def bulk_commit(self, staging_path: str) -> None:
         """Swap staged files in as the table's new contents, then apply
@@ -758,16 +761,13 @@ class EntityTable:
         swap inside the committed table dir; a crash between swap and
         apply leaves the tombstones on disk (unapplied but recoverable)
         instead of silently dropping them."""
-        from kiji_mapreduce_spark.io.outputs import (
-            fs_delete, fs_exists, fs_listdir,
-        )
-
         staging_path = staging_path.rstrip("/")
         deletes_path = staging_path + "/_deletes"
         staged_deletes = None
         if fs_exists(deletes_path, self.spark):
             # pin the tombstone CONTENTS before any path mutation
-            staged_deletes = self.spark.read.parquet(
+            staged_deletes = self.spark.read.schema(
+                self._delete_schema()).parquet(
                 deletes_path).localCheckpoint(eager=True)
         has_rows = any(
             name.startswith("_bucket=") or name.endswith(".parquet")
@@ -818,8 +818,6 @@ class EntityTable:
         The produce runs on just this row (bucket-pruned single-row scan)
         and merges back one cell.
         """
-        import time as _time
-
         def _cells_of(fam_val, qualifier):
             # map families surface as Python dicts — a missing qualifier
             # must read as "no cell yet" (freshen), not KeyError
@@ -833,7 +831,7 @@ class EntityTable:
             except (KeyError, ValueError):
                 return None
 
-        now_ms = now_ms if now_ms is not None else int(_time.time() * 1000)
+        now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
         row_df = self.get(*components)
         first = row_df.first()
         if first is None:
@@ -855,8 +853,6 @@ class EntityTable:
         value_type = (fam_type.valueType if hasattr(fam_type, "valueType")
                       else fam_type[qualifier].dataType
                       ).elementType["value"].dataType
-        from pyspark.sql.types import StructType
-
         # value travels typed and is rendered by Spark's cast — a Python
         # str() would disagree with the cast for bool/double/timestamp
         put_schema = (StructType()
@@ -869,9 +865,7 @@ class EntityTable:
         # render complex values as JSON — _parse_value decodes
         # record/array/map cells with from_json, and Spark's struct->
         # string cast is NOT JSON, so a cast here would round-trip to
-        # null (r5 review finding); primitives keep the exact cast
-        from pyspark.sql.types import ArrayType, MapType, StructType
-
+        # null; primitives keep the exact cast
         if isinstance(value_type, (StructType, ArrayType, MapType)):
             value_str = F.to_json(F.col("value"))
         else:
@@ -899,8 +893,6 @@ class EntityTable:
         byte-identical, so it is safe to run continuously and only pays
         for the buckets that actually churned.
         """
-        from kiji_mapreduce_spark.io.outputs import fs_listdir
-
         flushed = self.flush_deltas()  # folding deltas packs those buckets
         data = self._data_path()
         if not self._is_bucket_partitioned():
@@ -924,11 +916,9 @@ class EntityTable:
         """Apply maxVersions + TTL retention to every versioned cell —
         the compaction the reference delegated to HBase. Narrow job: no
         shuffle, rewrite in place."""
-        import time as _time
-
         self.flush_deltas()
-        now_ms = now_ms if now_ms is not None else int(_time.time() * 1000)
-        df = self.read()
+        now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
+        exprs = {}
         for fam in self.layout.families:
             def retained(col_expr, max_versions=None):
                 out = cell_fns.retain_versions(
@@ -940,18 +930,11 @@ class EntityTable:
                 return out
 
             if fam.kind == "map":
-                df = df.withColumn(
-                    fam.name,
-                    F.transform_values(F.col(fam.name), lambda _, v: retained(v)),
-                )
+                exprs[fam.name] = F.transform_values(
+                    F.col(fam.name), lambda _, v: retained(v))
             else:
-                fam_struct = F.col(fam.name)
-                for col in fam.columns:
-                    # per-column max_versions overrides the family's
-                    # (layout JSON declares it per column too; it was
-                    # parsed but never applied — r5 review finding)
-                    fam_struct = fam_struct.withField(
-                        col.name, retained(fam_struct[col.name],
-                                           col.max_versions))
-                df = df.withColumn(fam.name, fam_struct)
-        self.overwrite(df)
+                # a column's own max_versions overrides the family's
+                exprs[fam.name] = _rebuild_group(
+                    fam, lambda col, cells: retained(cells, col.max_versions),
+                    keep_null=True)
+        self.overwrite(self._project(self.read(), exprs))

@@ -249,3 +249,19 @@ def test_widened_scan_cache_sees_rewritten_fixture(spark, tmp_path):
     spark.range(100).repartition(target + 2).write.mode(
         "overwrite").parquet(path)
     assert "Exchange" not in widened()  # now wide enough: no shuffle
+
+
+def test_schema_cache_sees_rewritten_fixture(spark, tmp_path):
+    """A fixture rewritten with an extra column within one application
+    reads with its new schema: the schema cache keys on file
+    mtime/size."""
+    from kiji_mapreduce_spark.suite import common
+
+    path = str(tmp_path / "documents.parquet")
+    spark.range(10).write.parquet(path)
+    assert common._t(spark, str(tmp_path), "documents").columns == ["id"]
+    spark.range(10).selectExpr("id", "id * 2 AS twice").write.mode(
+        "overwrite").parquet(path)
+    df = common._t(spark, str(tmp_path), "documents")
+    assert df.columns == ["id", "twice"]
+    assert sorted(r.twice for r in df.collect()) == list(range(0, 20, 2))

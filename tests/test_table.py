@@ -572,7 +572,7 @@ def test_mutations_flush_pending_deltas_first(spark, tmp_path):
     t.merge_delete(_deletes(spark, [(("gone",), None, None, None)]))
     keys = sorted(r.entity_id.key for r in t.read().collect())
     assert keys == ["kept"]
-    assert not t._has_deltas()
+    assert t._delta_buckets() == []
 
 
 def test_bulk_stage_tombstones(spark, tmp_path):
@@ -792,3 +792,237 @@ def test_key_packing_prefix_free_collisions(spark):
                                   "entity_id struct<a:string, b:string>")
     assert clean.select(rk2.key_expr().alias("k")).collect()[0].k \
         == "42\x00x"
+
+
+def _jobs_run_by(spark, fn):
+    """``(fn(), number of Spark jobs fn launched)``, counted in a job
+    group of its own once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_entity_calls_launch_no_spark_job(spark, tmp_path):
+    """get/read/scan only build plans: the layout is the reader schema
+    (no footer inference) and the key's bucket folds to a literal
+    partition filter (no routing job), with and without pending deltas.
+    A point get then costs exactly its one collect job."""
+    import re
+
+    t = EntityTable.create(spark, str(tmp_path / "tj"), LAYOUT, n_buckets=8)
+    t.merge_put(_puts(spark, [
+        ((f"user{i}",), "info", "email", 1, f"u{i}@x") for i in range(20)]))
+    for pending in (False, True):
+        if pending:
+            t.put_delta(_puts(spark, [(("user3",), "info", "email", 2, "d")]))
+        for call in (lambda: t.get("user3"), t.read, t.scan):
+            _, n_jobs = _jobs_run_by(spark, call)
+            assert n_jobs == 0, (pending, n_jobs)
+    t.flush_deltas()
+    got = t.get("user3")
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*\(_bucket#\d+ = \d+\)",
+                     plan), plan
+    rows, n_jobs = _jobs_run_by(spark, got.collect)
+    assert [(c.ts, c.value) for c in rows[0].info.email] == [
+        (2, "d"), (1, "u3@x")]
+    assert n_jobs == 1
+
+
+def test_flush_takes_buckets_from_the_log_listing(spark, tmp_path):
+    """flush_deltas returns exactly the _bucket= ids under delta/, and
+    finding them costs no job: the flush runs only its merge and write
+    jobs."""
+    import os
+
+    path = str(tmp_path / "tfl")
+    t = EntityTable.create(spark, path, LAYOUT, n_buckets=8)
+    t.merge_put(_puts(spark, [
+        ((f"user{i}",), "info", "email", 1, f"u{i}@x") for i in range(20)]))
+    t.put_delta(_puts(spark, [
+        ((f"user{i}",), "info", "visits", 2, str(i)) for i in range(0, 20, 3)]))
+    t.put_delta(_puts(spark, [(("fresh",), "info", "email", 3, "f@x")]))
+    delta = os.path.join(path, "delta")
+    listed = sorted({int(m.split("=")[1])
+                     for b in os.listdir(delta) if b.startswith("_batch=")
+                     for m in os.listdir(os.path.join(delta, b))
+                     if m.startswith("_bucket=")})
+    assert 1 < len(listed) < 8
+    flushed, n_jobs = _jobs_run_by(spark, t.flush_deltas)
+    assert flushed == listed
+    # merge: key shuffle + join + pin; rewrite: bucket shuffle + write
+    assert n_jobs <= 5, n_jobs
+    got = {r.entity_id.key: r for r in t.read().collect()}
+    assert len(got) == 21
+    assert got["user9"].info.visits[0].value == 9
+    assert got["fresh"].info.email[0].value == "f@x"
+
+
+WIDE_LAYOUT = TableLayout.from_json({
+    "name": "wide",
+    "row_key": {"format": "FORMATTED",
+                "components": [{"name": "key", "type": "string"}]},
+    "families": [{"name": "g", "kind": "group", "max_versions": 2,
+                  "columns": [{"name": f"c{i}", "schema": "counter"}
+                              for i in range(10)]}]})
+
+
+def test_wide_group_family_plans_stay_linear(spark, tmp_path):
+    """One 10-column group family: the cell-update plans of _apply_puts,
+    increment, merge_delete and compact each analyze to under 50,000
+    chars (a per-column struct-update chain doubles per column), and
+    every result matches a per-column Python model. A NULL family
+    becomes a struct of cells on put/increment and stays NULL on
+    delete/compact."""
+    cols = [f"c{i}" for i in range(10)]
+    t = EntityTable.create(spark, str(tmp_path / "tw"), WIDE_LAYOUT,
+                           n_buckets=4)
+    plan_sizes = []
+    write_canonical = t._write_canonical
+
+    def recording(df, *args, **kwargs):
+        plan_sizes.append(len(df._jdf.queryExecution().analyzed().toString()))
+        return write_canonical(df, *args, **kwargs)
+
+    t._write_canonical = recording
+    # model: key -> None (NULL family) | {col: [(ts, value), ...] newest first}
+    model = {"full": {c: [(1, i)] for i, c in enumerate(cols)},
+             "nul": None}
+    t.overwrite(spark.createDataFrame(
+        [(("full",), tuple([[(1, i)] for i in range(10)])), (("nul",), None)],
+        WIDE_LAYOUT.spark_schema()))
+
+    def observed(rows):
+        return {r.entity_id.key: None if r.g is None else
+                {c: None if r.g[c] is None else
+                 [(x.ts, x.value) for x in r.g[c]] for c in cols}
+                for r in rows}
+
+    def put(state, ts, value):
+        cells = [x for x in (state or []) if x[0] != ts] + [(ts, value)]
+        return sorted(cells, reverse=True)
+
+    def wide(fam):
+        return fam if fam is not None else {c: None for c in cols}
+
+    # _apply_puts: a plan, so measure it directly
+    puts = _puts(spark, [(("full",), "g", "c2", 5, "50"),
+                         (("nul",), "g", "c4", 5, "40"),
+                         (("new",), "g", "c9", 5, "90")])
+    merged = t._apply_puts(t.read(), puts)
+    put_plan = len(merged._jdf.queryExecution().analyzed().toString())
+    expect = {k: None if v is None else dict(v) for k, v in model.items()}
+    for key, c, ts, value in (("full", "c2", 5, 50), ("nul", "c4", 5, 40),
+                              ("new", "c9", 5, 90)):
+        fam = wide(expect.get(key))
+        fam[c] = put(fam[c], ts, value)
+        expect[key] = fam
+    assert observed(merged.collect()) == expect
+    assert put_plan < 50_000, put_plan
+
+    def check(op, *args):
+        plan_sizes.clear()
+        op(*args)
+        assert plan_sizes and max(plan_sizes) < 50_000, (op, plan_sizes)
+        assert observed(t.read().collect()) == model
+
+    # increment: untouched columns pass through; NULL family seeded
+    model["full"]["c0"] = put(model["full"]["c0"], 7, 0 + 3)
+    model["nul"] = wide(None)
+    model["nul"]["c1"] = [(7, 4)]
+    check(t.increment, _incs(spark, [(("full",), "g", "c0", 7, 3),
+                                     (("nul",), "g", "c1", 7, 4)]))
+
+    def null_out():
+        """Make the "nul" row's family NULL again (an increment seeds
+        every row of the buckets it rewrites)."""
+        model["nul"] = None
+        t.overwrite(t.read().withColumn(
+            "g", F.when(F.col("entity_id.key") == "nul", F.lit(None))
+            .otherwise(F.col("g"))))
+
+    null_out()
+    # merge_delete: cells up to ts 1 go from every column; NULL stays NULL
+    model["full"] = {c: [x for x in v if x[0] > 1] for c, v in
+                     model["full"].items()}
+    check(t.merge_delete, spark.createDataFrame(
+        [(("full",), "g", c, 1) for c in cols] + [(("nul",), "g", None, 1)],
+        "entity_id struct<key:string>, family string, qualifier string,"
+        " upto_ts long"))
+    # compact: max_versions 2 per column; NULL stays NULL
+    for ts in (8, 9):
+        t.increment(_incs(spark, [(("full",), "g", "c0", ts, 1)]))
+    null_out()
+    model["full"]["c0"] = [(9, 5), (8, 4), (7, 3)]
+    assert observed(t.read().collect()) == model
+    model["full"]["c0"] = [(9, 5), (8, 4)]
+    check(t.compact, 10)
+
+
+def test_put_delta_writes_the_fragment_schema(spark, tmp_path):
+    """put_delta selects and casts the five put columns to the delta
+    schema: an int ts and an extra column give the same merge-on-read
+    get and flushed table as merge_put of the plain puts."""
+    rows = [(("a",), "info", "email", 3, "a3@x"),
+            (("a",), "info", "visits", 3, "7"),
+            (("b",), "info", "email", 4, "b4@x"),
+            (("c",), "tags", "t1", 5, "x")]
+    base = [(("a",), "info", "email", 1, "a1@x"),
+            (("b",), "info", "visits", 1, "1")]
+    direct = EntityTable.create(spark, str(tmp_path / "td1"), LAYOUT,
+                                n_buckets=4)
+    direct.merge_put(_puts(spark, base))
+    direct.merge_put(_puts(spark, rows))
+    buffered = EntityTable.create(spark, str(tmp_path / "td2"), LAYOUT,
+                                  n_buckets=4)
+    buffered.merge_put(_puts(spark, base))
+    buffered.put_delta(spark.createDataFrame(
+        [r[:3] + (r[3], r[4], "ignored") for r in rows],
+        "entity_id struct<key:string>, family string, qualifier string,"
+        " ts int, value_str string, note string"))
+
+    def rows_of(df):
+        return sorted(df.collect(), key=lambda r: r.entity_id.key)
+
+    for key in ("a", "b", "c"):
+        assert rows_of(buffered.get(key)) == rows_of(direct.get(key))
+    assert rows_of(buffered.read()) == rows_of(direct.read())
+    written = spark.read.parquet(buffered._delta_path()).schema
+    assert written.simpleString() == (
+        "struct<entity_id:struct<key:string>,family:string,qualifier:string,"
+        "ts:bigint,value_str:string,_seq:bigint,_batch:bigint,_bucket:int>")
+    buffered.flush_deltas()
+    assert rows_of(buffered.read()) == rows_of(direct.read())
+
+
+def test_read_schema_is_the_layout(spark, tmp_path):
+    """The layout is the reader schema: a created table reads with the
+    layout's schema (Spark reports file columns nullable, so the check
+    ignores nullability), and a layout that gained a family reads the
+    old files with it, the new family NULL."""
+    import json
+
+    path = str(tmp_path / "ts")
+    t = EntityTable.create(spark, path, LAYOUT)
+    assert t.read().schema.simpleString() == \
+        LAYOUT.spark_schema().simpleString()
+    t.merge_put(_puts(spark, [(("a",), "info", "email", 1, "a@x")]))
+    grown = json.loads(LAYOUT.to_json())
+    grown["families"].append({"name": "extra", "kind": "group",
+                              "columns": [{"name": "n", "schema": "long"}]})
+    with open(f"{path}/_kiji_layout.json", "w") as fh:
+        json.dump(grown, fh)
+    t2 = EntityTable.open(spark, path)
+    assert t2.read().schema.simpleString() == \
+        t2.layout.spark_schema().simpleString()
+    assert [r.extra for r in t2.read().collect()] == [None]
+    assert t2.get("a").first().info.email[0].value == "a@x"
