@@ -1,15 +1,15 @@
 """Brotli decode via a SYSTEM ``libbrotlidec`` (RFC 7932), when one
 exists — ctypes over the stable public C API, no bundled code.
 
-Why gated, unlike the in-repo zstd decoder: brotli's format is public
-(RFC 7932) but its 120 KB static dictionary and 121-entry transform
-table are DATA, not derivable spec — a from-scratch decoder cannot be
-written from public knowledge alone, which is why `content-encoding:
-br` bodies were previously reject-only (r10/r11 verdicts accepted
-that gap). A system library, where present, closes it: ``available()``
-is probed once per process, the crawl gate widens to treat ``br`` as
-inflatable only when the probe succeeds, and absent the library the
-loud reject-and-count path stands exactly as before.
+Why gated: brotli's format is public (RFC 7932) but its 120 KB static
+dictionary and 121-entry transform table are DATA, not derivable spec
+— a from-scratch decoder cannot be written from public knowledge
+alone, which is why `content-encoding: br` bodies were previously
+reject-only (r10/r11 verdicts accepted that gap). A system library,
+where present, closes it: ``available()`` is probed once per process,
+the crawl gate widens to treat ``br`` as inflatable only when the
+probe succeeds, and absent the library the loud reject-and-count path
+stands exactly as before.
 
 Scale shape: C-speed decode, one-shot per HTTP body inside the WARC
 parser's mapInPandas (bytes already Python-side); output bounded by

@@ -24,7 +24,8 @@ to a Spark reader:
                       file from ``binaryFile`` rows (``read_warc_records``)
 - tar / zip        -> bonus: dataset-shard archive members as rows
                       (``read_archive_members``; tar streams members
-                      O(member) incl. .tar.{gz,bz2,xz})
+                      O(member) incl. .tar.{gz,bz2,xz}; .tar.zst
+                      decodes through pyarrow's libzstd first)
 - webdataset       -> bonus: WebDataset-convention tar shards grouped
                       into sample rows (key + map<extension, bytes>)
                       — the layout multimodal training corpora ship in
@@ -36,6 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kiji_mapreduce_spark.io import zstd_codec
 from kiji_mapreduce_spark.request import DataRequest
 
 
@@ -254,30 +256,20 @@ def _zst_data_frames(raw: bytes, where: str):
     ``.warc.zst`` read path and the CDX member walk, so the two can
     never disagree on which frames of an archive decode (the
     lenient-prefix read/index agreement contract). Skippable frames
-    are passed over. Gates: 256 MiB compressed input (checked BEFORE
-    the walk, reported as the over-limit condition it is — not
-    corruption), ``_MAX_RANGE_OUT`` per frame (the gzip member
-    ceiling), and ``_MAX_ZSTD_ARCHIVE_OUT`` CUMULATIVE across frames —
-    frame-by-frame decode must not turn the old archive-level bomb
-    gate into an unbounded sum of under-the-cap frames."""
-    from kiji_mapreduce_spark.io import zstd_codec
-
-    if len(raw) > _MAX_ZSTD_ARCHIVE_BYTES:
-        raise ValueError(
-            f"{where}: .warc.zst over the "
-            f"{_MAX_ZSTD_ARCHIVE_BYTES >> 20} MiB pure-Python "
-            "decode gate — recompress as .warc.gz or split")
+    are passed over. Output ceilings only, as for gzip: ``_MAX_RANGE_OUT``
+    per frame (the gzip member ceiling), and ``_MAX_ZSTD_ARCHIVE_OUT``
+    CUMULATIVE across frames — frame-by-frame decode must not turn the
+    archive-level bomb gate into an unbounded sum of under-the-cap
+    frames."""
     total = 0
     try:
-        for start, end, skippable in zstd_codec.frame_spans(
-                raw, max_input=_MAX_ZSTD_ARCHIVE_BYTES):
+        for start, end, skippable in zstd_codec.frame_spans(raw):
             if skippable:
                 continue
             budget = min(_MAX_RANGE_OUT,
                          _MAX_ZSTD_ARCHIVE_OUT - total)
-            data = zstd_codec.decompress(
-                raw[start:end], max_output=budget,
-                max_input=_MAX_ZSTD_ARCHIVE_BYTES)
+            data = zstd_codec.decompress(raw[start:end],
+                                         max_output=budget)
             total += len(data)
             yield start, end - start, data
     except ValueError as e:
@@ -294,7 +286,7 @@ def _inflate_zst_frames(raw: bytes, path: str, lenient: bool):
     huge frame (the r8 O(record + chunk) contract). Lenient keeps
     everything decoded before the first truncated/corrupt/dictionary
     frame — the same parsed-prefix contract as the gzip path and the
-    CDX member walk (which shares ``_zst_data_frames``, gates
+    CDX member walk (which shares ``_zst_data_frames``, ceilings
     included, so read and index agree on every archive); strict
     raises ValueError."""
     step = 1 << 20
@@ -440,18 +432,18 @@ def _parse_warc(raw: bytes, path: str, lenient: bool):
     record are ever resident."""
     if raw[:2] == b"\x1f\x8b":
         chunks = _inflate_members(raw, path, lenient)
-    elif _zstd_magic(raw):
-        # .warc.zst (newer archive tooling ships these; _zstd_magic
-        # also admits a leading skippable frame): decode FRAME BY
-        # FRAME via frame_spans + the pure-Python RFC 8878 decoder
-        # under the same compressed/decompressed gates as .tar.zst
-        # shards — memory is O(frame + record), and lenient keeps the
-        # parsed prefix when a later frame is truncated or corrupt
-        # (the gzip-member contract; the index path's member walk
-        # keeps the same prefix, so read and index agree). A
-        # whole-archive single frame still decodes — it is just one
-        # big "member". Dictionary frames fail that frame's decode
-        # loudly: strict raises, lenient keeps the frames before it.
+    elif zstd_codec.is_zstd(raw):
+        # .warc.zst (newer archive tooling ships these; is_zstd also
+        # admits a leading skippable frame): decode FRAME BY FRAME via
+        # frame_spans + pyarrow's libzstd under the per-frame and
+        # cumulative output ceilings — memory is O(frame + record), and
+        # lenient keeps the parsed prefix when a later frame is
+        # truncated or corrupt (the gzip-member contract; the index
+        # path's member walk keeps the same prefix, so read and index
+        # agree). A whole-archive single frame still decodes — it is
+        # just one big "member". Dictionary frames fail that frame's
+        # decode loudly: strict raises, lenient keeps the frames
+        # before it.
         chunks = _inflate_zst_frames(raw, path, lenient)
     else:
         # bounded memoryview slices, NOT one whole-archive chunk: the
@@ -469,12 +461,6 @@ def _parse_warc(raw: bytes, path: str, lenient: bool):
 #: in a single call and OOMs the task that owns the whole archive,
 #: breaking the parser's O(record + chunk) per-task memory contract
 _MAX_INFLATE = 1 << 28
-
-#: compressed-size gate for zstd HTTP bodies: the pure-Python decoder
-#: is a lenient fallback (~4 MB/s worst case), so a body this large is
-#: left encoded for the crawl gate to reject-and-count rather than
-#: stalling an executor task; real pages sit far below it
-_MAX_ZSTD_BODY = 8 << 20
 
 
 def _inflate_http_body(data: bytes, wbits: int):
@@ -508,10 +494,12 @@ def _inflate_http_body(data: bytes, wbits: int):
 def _decode_http_payload(body: bytes) -> bytes:
     """Normalize an HTTP-response WARC payload to identity encoding:
     de-chunk ``Transfer-Encoding: chunked`` framing and inflate
-    ``Content-Encoding: gzip/x-gzip/deflate`` bodies, dropping the
-    now-stale encoding + Content-Length headers. Crawls store responses
-    AS CAPTURED, so without this the downstream Catalyst text extractor
-    would strip tags out of gzip bytes and emit garbage.
+    ``Content-Encoding: gzip/x-gzip/deflate/zstd`` bodies (``br`` when
+    a system libbrotlidec exists), each under the ``_MAX_INFLATE``
+    output ceiling, dropping the now-stale encoding + Content-Length
+    headers. Crawls store responses AS CAPTURED, so without this the
+    downstream Catalyst text extractor would strip tags out of gzip
+    bytes and emit garbage.
 
     Lenient by construction: non-HTTP payloads, identity responses, and
     anything that fails to de-chunk/inflate pass through UNTOUCHED —
@@ -579,15 +567,10 @@ def _decode_http_payload(body: bytes) -> bytes:
                 except ValueError:
                     inflated = None
         elif coding == b"zstd":
-            # pure-Python frame decoder (RFC 8878, io.zstd_codec) —
-            # worst-case ~4 MB/s of output, so bound the COMPRESSED
-            # input too: an oversized zstd body passes through and the
-            # still-encoded gate rejects-and-counts it instead of one
-            # record stalling its task for minutes
-            if len(decoded) > _MAX_ZSTD_BODY:
-                return body
-            from kiji_mapreduce_spark.io import zstd_codec
-
+            # pyarrow's libzstd (io.zstd_codec): C speed, so like gzip
+            # only the decoded size is capped — a bomb past
+            # _MAX_INFLATE passes through still encoded for the crawl
+            # gate to reject-and-count
             try:
                 inflated = zstd_codec.decompress(
                     decoded, max_output=_MAX_INFLATE)
@@ -680,13 +663,6 @@ def warc_records_from_files(files: DataFrame, lenient: bool = False,
 _MAX_ARCHIVE_MEMBER_BYTES = 4 << 30
 
 
-#: compressed-size gate for .tar.zst shards: the pure-Python decoder
-#: runs ~5 MB/s on text-like payloads, so a shard this large would
-#: stall its task for tens of minutes — reject loudly (strict) / skip
-#: (lenient) and let the operator recompress; gz/bz2/xz shards stream
-#: at C speed with no such gate
-_MAX_ZSTD_ARCHIVE_BYTES = 256 << 20
-
 #: .tar.zst decompressed ceiling: the member budget plus headroom for
 #: tar structure (512 B header + padding per member), so members
 #: summing to just under the budget don't fail where the identical
@@ -701,10 +677,10 @@ def _iter_tar_members(blob: bytes, path: str, lenient: bool):
     training shards ship in).
 
     ``.tar.zst`` (the WebDataset/HF-datasets favorite) is handled by
-    inflating the zstd frames first via the pure-Python ``zstd_codec``
-    (tarfile's ``r|*`` sniffs only gz/bz2/xz): O(archive) memory and
-    ~5 MB/s for that one compression, so its compressed size is gated
-    at ``_MAX_ZSTD_ARCHIVE_BYTES``.
+    inflating the zstd frames first through pyarrow's libzstd
+    (``zstd_codec``; tarfile's ``r|*`` sniffs only gz/bz2/xz):
+    O(archive) memory for that one compression, capped at
+    ``_MAX_ZSTD_ARCHIVE_OUT`` decoded bytes.
 
     The corrupt-data except tuple wraps ONLY tarfile/zstd internals
     (open, member step, extract) — a TypeError from our own code must
@@ -730,21 +706,12 @@ def _iter_tar_members(blob: bytes, path: str, lenient: bool):
                TypeError, zlib.error)
     budget = _MAX_ARCHIVE_MEMBER_BYTES
     try:
-        from kiji_mapreduce_spark.io import zstd_codec
-
         if zstd_codec.is_zstd(blob):
-            if len(blob) > _MAX_ZSTD_ARCHIVE_BYTES:
-                raise ValueError(
-                    f"{path}: .tar.zst shard over the "
-                    f"{_MAX_ZSTD_ARCHIVE_BYTES >> 20} MiB "
-                    "pure-Python decode gate — recompress as .tar.gz "
-                    "or split the shard")
             blob = zstd_codec.decompress(
-                blob, max_output=_MAX_ZSTD_ARCHIVE_OUT,
-                max_input=_MAX_ZSTD_ARCHIVE_BYTES)
+                blob, max_output=_MAX_ZSTD_ARCHIVE_OUT)
         tf = tarfile.open(fileobj=_io.BytesIO(blob), mode="r|*")
     except corrupt as e:
-        # truncated shard / corrupt compression / the zstd gates: the
+        # truncated shard / corrupt compression / the zstd ceiling: the
         # lenient contract keeps everything already yielded (crawl/
         # WARC precedent) — the always-lenient shard stream depends on
         # it, else one hostile shard wedges the claimed offset-log
@@ -1004,45 +971,21 @@ _MAX_RANGE_OUT = 2 << 30
 _FLUSH_BYTES = 32 << 20
 
 
-def _zstd_magic(raw: bytes) -> bool:
-    """True when ``raw`` opens with a zstd frame — data OR skippable
-    (RFC 8878 §3.1.2: tools may prepend metadata frames, and the
-    seekable format is skippable-framed), so format routing cannot be
-    dodged by a leading seek table. Delegates to the codec's probe so
-    the routing predicate has exactly one definition."""
-    from kiji_mapreduce_spark.io import zstd_codec
-
-    return zstd_codec.is_zstd(raw)
-
-
 def _inflate_range(blob: bytes, where: str):
     """Inflate a CDX-pointed byte range. Common Crawl WARCs compress
     each record as its OWN gzip member, so a correctly-pointed range IS
     a complete gzip stream (concatenated members tolerated); ranges
     into per-record-frame ``.warc.zst`` archives are complete zstd
-    frames and go through the RFC 8878 decoder under the same output
+    frames and go through pyarrow's libzstd under the same output
     ceiling; a range into a plain ``.warc`` passes through as-is.
     Returns bytes, or raises ValueError on a misaligned offset
     (mid-stream garbage), a truncated member, or a decompression bomb
     over ``_MAX_RANGE_OUT``."""
     import zlib
 
-    if _zstd_magic(blob):
-        from kiji_mapreduce_spark.io import zstd_codec
-
-        # over-limit is a DISTINCT condition from corruption (the gzip
-        # path keeps its ceiling error separate too): a valid range
-        # past the pure-Python decode gate must say "recompress/split",
-        # not misdirect diagnosis toward archive damage
-        if len(blob) > _MAX_ZSTD_ARCHIVE_BYTES:
-            raise ValueError(
-                f"{where}: zstd range over the "
-                f"{_MAX_ZSTD_ARCHIVE_BYTES >> 20} MiB pure-Python "
-                "decode gate — recompress as .warc.gz or split")
+    if zstd_codec.is_zstd(blob):
         try:
-            return zstd_codec.decompress(
-                blob, max_output=_MAX_RANGE_OUT,
-                max_input=_MAX_ZSTD_ARCHIVE_BYTES)
+            return zstd_codec.decompress(blob, max_output=_MAX_RANGE_OUT)
         except ValueError as e:
             raise ValueError(f"{where}: corrupt zstd range: {e}") from e
     if blob[:2] != b"\x1f\x8b":
@@ -1317,7 +1260,7 @@ def _walk_zst_members(raw: bytes, where: str):
     records). Skippable frames (the seekable format's seek table, or
     tool metadata) carry no records and are passed over. Pure
     delegation to ``_zst_data_frames`` — the READ path decodes
-    through the same loop and the same gates, so index and read
+    through the same loop and the same ceilings, so index and read
     agree on every archive's decodable prefix."""
     yield from _zst_data_frames(raw, where)
 
@@ -1400,7 +1343,7 @@ def read_warc_raw(spark: SparkSession, paths: list[str],
             for path, content in zip(pdf["path"], pdf["content"]):
                 raw = bytes(content)
                 is_plain = not (raw[:2] == b"\x1f\x8b"
-                                or _zstd_magic(raw))
+                                or zstd_codec.is_zstd(raw))
                 walker = (_walk_plain_records if is_plain
                           else _walk_gz_members
                           if raw[:2] == b"\x1f\x8b"
@@ -1493,7 +1436,7 @@ def warc_member_index(files: DataFrame,
             for path, content in zip(pdf["path"], pdf["content"]):
                 raw = bytes(content)
                 is_gz = raw[:2] == b"\x1f\x8b"
-                is_zst = _zstd_magic(raw)
+                is_zst = zstd_codec.is_zstd(raw)
                 walker = (_walk_gz_members if is_gz
                           else _walk_zst_members if is_zst
                           else _walk_plain_records)

@@ -1,30 +1,20 @@
-"""Pure-Python Zstandard frame decoder (RFC 8878).
+"""Zstandard (RFC 8878) frames: decode through pyarrow's libzstd,
+plus the header-only frame walk and the store-mode encoder behind the
+seekable ``.warc.zst`` layout.
 
 Why it exists: real crawls carry ``Content-Encoding: zstd`` responses
-and training shards ship as ``.tar.zst``; the container bundles no zstd
-module (stdlib gains one only in 3.14), so without this every such
-body/shard is loud-skipped (the r11 reject-gate discipline). The format
-is fully public — RFC 8878 specifies the frame/block layout, FSE and
-Huffman coding, and the predefined distributions verbatim — so the
-decode half is implementable exactly like the repo's other from-spec
-codecs (FLAC per RFC 9639, JPEG per T.81, VP8L, GIF89a).
+and training shards ship as ``.tar.zst``. pyarrow (a declared
+dependency) bundles libzstd, so ``decompress`` is a thin wrapper over
+``pa.input_stream(..., compression="zstd")``: C-speed decode with
+content-checksum verification, concatenated frames and skippable
+frames handled by the library. Callers therefore gate OUTPUT only —
+``max_output`` is the bomb gate (the ``_inflate_http_body`` twin) — and
+put no ceiling on compressed input, the same rule as gzip/bz2/xz.
 
-Decode-complete, encode-minimal by design: the full decoder handles
-any conformant frame, while the only encoder is ``compress_store``
-(store-mode frames — raw blocks + exact FCS + XXH64 checksum, the
-write half of the seekable per-record-frame ``.warc.zst`` layout);
-the COMPRESSING encoder half (optimal parsing, table construction) is
-where the engineering burden lives and stays out of scope. No
-dictionary support — HTTP bodies and shard files are self-contained
-frames (a ``Dictionary_ID`` raises).
-
-Scale shape: this is a per-record Python fallback on the lenient ingest
-path, not a bulk codec — throughput is ~1 MB/s of decompressed output,
-so callers gate it: the HTTP normalizer refuses compressed bodies over
-``_MAX_COMPRESSED_INPUT`` and caps output at ``max_output`` (bomb gate,
-the ``_inflate_http_body`` twin). Within those bounds one hostile frame
-costs bounded CPU: every loop is capped by a declared size that is
-itself capped.
+What stays in-repo is what libzstd's streaming API does not expose:
+``frame_spans`` (frame boundaries without decoding, the per-frame
+member walk of a ``.warc.zst``), ``compress_store`` (byte-stable
+store-mode frames) and ``seek_table`` (the seekable-format footer).
 
 Error surface: ``ValueError`` for ANY malformed input — the corrupt-
 data contract shared with ``avro_codec``/``media_codecs`` (fuzz-pinned
@@ -39,545 +29,11 @@ _FRAME_MAGIC = 0xFD2FB528
 _SKIPPABLE_LO = 0x184D2A50
 _SKIPPABLE_HI = 0x184D2A5F
 
-#: refuse to hand the pure-Python hot loops more than this much
-#: COMPRESSED input (callers may gate earlier; HTTP bodies do)
-_MAX_COMPRESSED_INPUT = 64 << 20
-
 _BLOCK_MAX = 1 << 17  # Block_Maximum_Size ceiling (128 KiB)
 
-# --- literals-length / match-length code tables (RFC 8878 §3.1.1.3.2.1.1)
-_LL_BASE = tuple(range(16)) + (
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024,
-    2048, 4096, 8192, 16384, 32768, 65536)
-_LL_BITS = (0,) * 16 + (1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10,
-                        11, 12, 13, 14, 15, 16)
-_ML_BASE = tuple(range(3, 35)) + (
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027,
-    2051, 4099, 8195, 16387, 32771, 65539)
-_ML_BITS = (0,) * 32 + (1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10,
-                        11, 12, 13, 14, 15, 16)
-
-# --- predefined FSE distributions (RFC 8878 §3.1.1.3.2.2)
-_LL_DEFAULT = ([4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-                2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1,
-                -1, -1, -1, -1], 6)
-_ML_DEFAULT = ([1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-                -1, -1, -1, -1, -1, -1, -1], 6)
-_OF_DEFAULT = ([1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-                1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1], 5)
-
-_MAX_LL_SYMBOL, _MAX_ML_SYMBOL, _MAX_OF_SYMBOL = 35, 52, 31
-_MAX_LL_LOG, _MAX_ML_LOG, _MAX_OF_LOG = 9, 9, 8
-
-
-class _BackBits:
-    """zstd's backward bitstream: bits were written LSB-first, the
-    stream is read from the END, and the last byte's highest set bit
-    is a sentinel marking where reading starts.
-
-    Reads are WINDOWED — a small ``int.from_bytes`` slice around the
-    bit cursor — never one whole-stream bignum, whose per-read shifts
-    would make decoding O(stream²) (measured: 2x slower at 256 KB
-    even before the blowup)."""
-
-    __slots__ = ("data", "ptr")
-
-    def __init__(self, data: bytes):
-        if not data or data[-1] == 0:
-            raise ValueError("zstd: bitstream missing sentinel bit")
-        self.data = data
-        self.ptr = (len(data) - 1) * 8 + data[-1].bit_length() - 1
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        ptr = self.ptr - n
-        if ptr < 0:
-            raise ValueError("zstd: bitstream exhausted")
-        self.ptr = ptr
-        sh = ptr & 7
-        lo = ptr >> 3
-        chunk = int.from_bytes(
-            self.data[lo:lo + ((n + sh + 7) >> 3)], "little")
-        return (chunk >> sh) & ((1 << n) - 1)
-
-
-def _fse_read_ncount(data: bytes, pos: int, max_symbol: int,
-                     max_log: int):
-    """FSE table description (RFC 8878 §4.1.1): forward LSB-first
-    bitstream of normalized counts -> (counts, accuracy_log, next_pos).
-    Counts may include -1 ("less than one"); they sum to 2^AL.
-    """
-    if pos >= len(data):
-        raise ValueError("zstd: truncated FSE table description")
-    bits = int.from_bytes(data[pos:pos + 512], "little")
-    bitpos = 0
-
-    def take(n):
-        nonlocal bitpos
-        out = (bits >> bitpos) & ((1 << n) - 1)
-        bitpos += n
-        if (bitpos + 7) // 8 > len(data) - pos:
-            raise ValueError("zstd: truncated FSE table description")
-        return out
-
-    accuracy_log = take(4) + 5
-    if accuracy_log > max_log:
-        raise ValueError(f"zstd: accuracy log {accuracy_log} over the "
-                         f"stream's {max_log} ceiling")
-    remaining = (1 << accuracy_log) + 1
-    threshold = 1 << accuracy_log
-    nbits = accuracy_log + 1
-    counts: list[int] = []
-    prev_zero = False
-    while remaining > 1:
-        if prev_zero:
-            # runs of zero-probability symbols: 2-bit repeat groups,
-            # value 3 extends the run
-            while True:
-                rep = take(2)
-                counts.extend([0] * min(rep, 3))
-                if rep < 3:
-                    break
-            prev_zero = False
-            if len(counts) > max_symbol + 1:
-                raise ValueError("zstd: FSE counts overrun alphabet")
-            continue
-        maxv = (2 * threshold - 1) - remaining
-        low = take(nbits - 1)
-        if low < maxv:
-            count = low
-        else:
-            count = low + (take(1) << (nbits - 1))
-            if count >= threshold:
-                count -= maxv
-        count -= 1  # 0 encodes the -1 "less than one" probability
-        remaining -= -count if count < 0 else count
-        counts.append(count)
-        if len(counts) > max_symbol + 1:
-            raise ValueError("zstd: FSE counts overrun alphabet")
-        prev_zero = count == 0
-        while remaining < threshold and remaining > 1:
-            nbits -= 1
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd: FSE counts do not sum to the table")
-    return counts, accuracy_log, pos + (bitpos + 7) // 8
-
-
-def _fse_build_table(counts, accuracy_log):
-    """Normalized counts -> decode table: cell i = (symbol, nb_bits,
-    base_state); next_state = base_state + read(nb_bits). The spread
-    and state assignment follow the RFC's algorithm exactly."""
-    size = 1 << accuracy_log
-    mask = size - 1
-    symbols = [0] * size
-    high = size - 1
-    for s, c in enumerate(counts):
-        if c == -1:  # "less than one": one cell, placed at the top
-            symbols[high] = s
-            high -= 1
-    step = (size >> 1) + (size >> 3) + 3
-    posn = 0
-    for s, c in enumerate(counts):
-        for _ in range(max(c, 0)):
-            symbols[posn] = s
-            posn = (posn + step) & mask
-            while posn > high:
-                posn = (posn + step) & mask
-    if posn != 0:
-        raise ValueError("zstd: FSE table spread did not close")
-    nxt = [1 if c == -1 else c for c in counts]
-    table = []
-    for i in range(size):
-        s = symbols[i]
-        x = nxt[s]
-        nxt[s] = x + 1
-        nb = accuracy_log - (x.bit_length() - 1)
-        table.append((s, nb, (x << nb) - size))
-    return table
-
-
-def _fse_rle_table(symbol: int):
-    """A 1-cell zero-bit table: the RLE_Mode stream (one symbol, no
-    state transitions)."""
-    return [(symbol, 0, 0)]
-
-
-def _huf_read_weights(data: bytes, pos: int):
-    """Huffman tree description (RFC 8878 §4.2.1) -> (per-symbol
-    number-of-bits list, table_log, next_pos). Handles both the direct
-    4-bit representation and FSE-compressed weights (two interleaved
-    states over one backward bitstream)."""
-    if pos >= len(data):
-        raise ValueError("zstd: truncated Huffman description")
-    h = data[pos]
-    pos += 1
-    if h >= 128:  # direct: 4-bit weights, high nibble first
-        n = h - 127
-        nbytes = (n + 1) // 2
-        if pos + nbytes > len(data):
-            raise ValueError("zstd: truncated Huffman weights")
-        weights = []
-        for i in range(n):
-            b = data[pos + i // 2]
-            weights.append((b >> 4) if i % 2 == 0 else (b & 0xF))
-        pos += nbytes
-    else:  # FSE-compressed weight stream of h bytes
-        if pos + h > len(data):
-            raise ValueError("zstd: truncated Huffman weight stream")
-        blob = data[pos:pos + h]
-        counts, al, hdr_end = _fse_read_ncount(blob, 0, 255, 6)
-        table = _fse_build_table(counts, al)
-        bits = _BackBits(blob[hdr_end:])
-        s1 = bits.read(al)
-        s2 = bits.read(al)
-        weights = []
-        while True:
-            if len(weights) > 254:
-                raise ValueError("zstd: Huffman weight stream overrun")
-            sym, nb, base = table[s1]
-            weights.append(sym)
-            if bits.ptr < nb:
-                weights.append(table[s2][0])
-                break
-            s1 = base + bits.read(nb)
-            sym, nb, base = table[s2]
-            weights.append(sym)
-            if bits.ptr < nb:
-                weights.append(table[s1][0])
-                break
-            s2 = base + bits.read(nb)
-    if len(weights) >= 256:
-        raise ValueError("zstd: too many Huffman weights")
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd: empty Huffman tree")
-    # the LAST symbol's weight is implicit: it completes the sum to
-    # the next power of two
-    p2 = 1 << total.bit_length()
-    leftover = p2 - total
-    if leftover & (leftover - 1):
-        raise ValueError("zstd: Huffman weights not completable")
-    weights.append(leftover.bit_length())
-    table_log = p2.bit_length() - 1
-    if table_log > 11:
-        raise ValueError("zstd: Huffman code longer than 11 bits")
-    nbits = [0 if w == 0 else table_log + 1 - w for w in weights]
-    return nbits, table_log, pos + (0 if h >= 128 else h)
-
-
-def _huf_build_table(nbits, table_log):
-    """Canonical layout (RFC 8878): symbols bucketed by weight
-    ascending (longest codes first), natural symbol order within a
-    weight, each filling 2^(table_log - nb) consecutive cells."""
-    size = 1 << table_log
-    table = [(-1, 0)] * size
-    posn = 0
-    for nb in range(table_log, 0, -1):  # longest codes first
-        span = 1 << (table_log - nb)
-        for s, snb in enumerate(nbits):
-            if snb == nb:
-                for i in range(span):
-                    table[posn + i] = (s, nb)
-                posn += span
-    if posn != size:
-        raise ValueError("zstd: Huffman table does not fill")
-    return table
-
-
-def _huf_decode_stream(data: bytes, table, table_log: int,
-                       n_out: int) -> bytearray:
-    """One backward Huffman literal stream -> exactly n_out bytes.
-
-    The peek is windowed like ``_BackBits.read`` (constant-time slices,
-    not whole-stream bignum shifts) and refilled every few symbols:
-    with table_log <= 11 a 56-bit window serves at least 5 decodes."""
-    bits = _BackBits(data)
-    raw, ptr = bits.data, bits.ptr
-    mask = (1 << table_log) - 1
-    out = bytearray(n_out)
-    frombytes = int.from_bytes
-    for i in range(n_out):
-        p = ptr - table_log
-        if p >= 0:
-            sh = p & 7
-            lo = p >> 3
-            idx = (frombytes(
-                raw[lo:lo + ((table_log + sh + 7) >> 3)],
-                "little") >> sh) & mask
-        else:  # final codes: peek pads with zeros below the start
-            chunk = frombytes(raw[:(ptr + 7) >> 3], "little") \
-                & ((1 << ptr) - 1)
-            idx = (chunk << (table_log - ptr)) & mask
-        sym, nb = table[idx]
-        if sym < 0 or nb > ptr:
-            raise ValueError("zstd: corrupt Huffman literal stream")
-        ptr -= nb
-        out[i] = sym
-    if ptr != 0:
-        raise ValueError("zstd: Huffman stream not fully consumed")
-    return out
-
-
-def _decode_literals(block: bytes, pos: int, ctx: dict):
-    """Literals section -> (literals bytes, next_pos). ctx carries the
-    frame's previous Huffman table for Treeless_Literals_Block."""
-    if pos >= len(block):
-        raise ValueError("zstd: truncated literals section")
-    b0 = block[pos]
-    ltype = b0 & 3
-    sf = (b0 >> 2) & 3
-    if ltype in (0, 1):  # Raw / RLE
-        if sf in (0, 2):
-            regen, pos = b0 >> 3, pos + 1
-        elif sf == 1:
-            if pos + 2 > len(block):
-                raise ValueError("zstd: truncated literals header")
-            regen = (b0 >> 4) + (block[pos + 1] << 4)
-            pos += 2
-        else:
-            if pos + 3 > len(block):
-                raise ValueError("zstd: truncated literals header")
-            regen = ((b0 >> 4) + (block[pos + 1] << 4)
-                     + (block[pos + 2] << 12))
-            pos += 3
-        if regen > _BLOCK_MAX:
-            raise ValueError("zstd: literals exceed block maximum")
-        if ltype == 0:
-            if pos + regen > len(block):
-                raise ValueError("zstd: truncated raw literals")
-            return block[pos:pos + regen], pos + regen
-        if pos >= len(block):
-            raise ValueError("zstd: truncated RLE literal")
-        return bytes([block[pos]]) * regen, pos + 1
-
-    # Compressed (2) / Treeless (3)
-    n_streams = 1 if sf == 0 else 4
-    if sf in (0, 1):
-        if pos + 3 > len(block):
-            raise ValueError("zstd: truncated literals header")
-        h = int.from_bytes(block[pos:pos + 3], "little")
-        regen = (h >> 4) & 0x3FF
-        comp = (h >> 14) & 0x3FF
-        pos += 3
-    elif sf == 2:
-        if pos + 4 > len(block):
-            raise ValueError("zstd: truncated literals header")
-        h = int.from_bytes(block[pos:pos + 4], "little")
-        regen = (h >> 4) & 0x3FFF
-        comp = (h >> 18) & 0x3FFF
-        pos += 4
-    else:
-        if pos + 5 > len(block):
-            raise ValueError("zstd: truncated literals header")
-        h = int.from_bytes(block[pos:pos + 5], "little")
-        regen = (h >> 4) & 0x3FFFF
-        comp = (h >> 22) & 0x3FFFF
-        pos += 5
-    if regen > _BLOCK_MAX:
-        raise ValueError("zstd: literals exceed block maximum")
-    if pos + comp > len(block):
-        raise ValueError("zstd: truncated compressed literals")
-    section = block[pos:pos + comp]
-    spos = 0
-    if ltype == 2:
-        nbits, table_log, spos = _huf_read_weights(section, 0)
-        ctx["huf"] = (_huf_build_table(nbits, table_log), table_log)
-    if ctx.get("huf") is None:
-        raise ValueError("zstd: treeless literals with no prior table")
-    table, table_log = ctx["huf"]
-    streams = section[spos:]
-    if n_streams == 1:
-        return bytes(_huf_decode_stream(streams, table, table_log,
-                                        regen)), pos + comp
-    if len(streams) < 6:
-        raise ValueError("zstd: truncated literal jump table")
-    s1, s2, s3 = struct.unpack("<HHH", streams[:6])
-    body = streams[6:]
-    if s1 + s2 + s3 > len(body):
-        raise ValueError("zstd: literal stream sizes overrun section")
-    per = (regen + 3) // 4
-    last = regen - 3 * per
-    if last < 0:
-        raise ValueError("zstd: four-stream literals shorter than 3")
-    out = bytearray()
-    bounds = [(0, s1, per), (s1, s1 + s2, per),
-              (s1 + s2, s1 + s2 + s3, per),
-              (s1 + s2 + s3, len(body), last)]
-    for lo, hi, n in bounds:
-        out += _huf_decode_stream(body[lo:hi], table, table_log, n)
-    return bytes(out), pos + comp
-
-
-def _seq_table(block: bytes, pos: int, mode: int, default,
-               max_symbol: int, max_log: int, ctx: dict, key: str):
-    """One sequence stream's decode table per its compression mode:
-    predefined / RLE / FSE / repeat (RFC 8878 §3.1.1.3.2.1)."""
-    if mode == 0:
-        counts, al = default
-        table = _fse_build_table(counts, al)
-        ctx[key] = (table, al)
-        return table, al, pos
-    if mode == 1:
-        if pos >= len(block):
-            raise ValueError("zstd: truncated RLE sequence symbol")
-        sym = block[pos]
-        if sym > max_symbol:
-            raise ValueError("zstd: RLE sequence symbol over alphabet")
-        ctx[key] = (_fse_rle_table(sym), 0)
-        return ctx[key][0], 0, pos + 1
-    if mode == 2:
-        counts, al, pos = _fse_read_ncount(block, pos, max_symbol,
-                                           max_log)
-        table = _fse_build_table(counts, al)
-        ctx[key] = (table, al)
-        return table, al, pos
-    if ctx.get(key) is None:
-        raise ValueError("zstd: repeat mode with no prior table")
-    table, al = ctx[key]
-    return table, al, pos
-
-
-def _decode_block(block: bytes, out: bytearray, ctx: dict,
-                  max_output: int, frame_start: int) -> None:
-    """One Compressed_Block: literals section + sequences section,
-    executed against (and appended to) ``out``. ``frame_start`` bounds
-    match offsets: a frame's window never reaches into the PREVIOUS
-    frame's output (RFC 8878 frames are independent) — without the
-    bound, a corrupt multi-frame stream could copy cross-frame bytes
-    and "decode" where the reference rejects (review finding r12)."""
-    literals, pos = _decode_literals(block, 0, ctx)
-    if pos >= len(block):
-        raise ValueError("zstd: missing sequences section")
-    b0 = block[pos]
-    pos += 1
-    if b0 == 0:
-        nbseq = 0
-    elif b0 < 128:
-        nbseq = b0
-    elif b0 < 255:
-        if pos >= len(block):
-            raise ValueError("zstd: truncated sequence count")
-        nbseq = ((b0 - 128) << 8) + block[pos]
-        pos += 1
-    else:
-        if pos + 2 > len(block):
-            raise ValueError("zstd: truncated sequence count")
-        nbseq = block[pos] + (block[pos + 1] << 8) + 0x7F00
-        pos += 2
-    if nbseq == 0:
-        if len(out) + len(literals) > max_output:
-            raise ValueError("zstd: output over the caller's ceiling")
-        out += literals
-        return
-    if pos >= len(block):
-        raise ValueError("zstd: truncated compression modes")
-    modes = block[pos]
-    pos += 1
-    if modes & 3:
-        raise ValueError("zstd: reserved compression-mode bits set")
-    ll_t, ll_log, pos = _seq_table(block, pos, modes >> 6, _LL_DEFAULT,
-                                   _MAX_LL_SYMBOL, _MAX_LL_LOG,
-                                   ctx, "ll")
-    of_t, of_log, pos = _seq_table(block, pos, (modes >> 4) & 3,
-                                   _OF_DEFAULT, _MAX_OF_SYMBOL,
-                                   _MAX_OF_LOG, ctx, "of")
-    ml_t, ml_log, pos = _seq_table(block, pos, (modes >> 2) & 3,
-                                   _ML_DEFAULT, _MAX_ML_SYMBOL,
-                                   _MAX_ML_LOG, ctx, "ml")
-
-    bits = _BackBits(block[pos:])
-    # the sequence loop is the decoder's hottest path (7 bit reads per
-    # sequence, ~100k sequences/MB of varied text): inline the
-    # windowed backward-bitstream reads on locals, no method calls
-    data, ptr = bits.data, bits.ptr
-    frombytes = int.from_bytes
-
-    def rd(n, _d=data, _fb=frombytes):
-        nonlocal ptr
-        if n == 0:
-            return 0
-        p = ptr - n
-        if p < 0:
-            raise ValueError("zstd: bitstream exhausted")
-        ptr = p
-        sh = p & 7
-        lo = p >> 3
-        return (_fb(_d[lo:lo + ((n + sh + 7) >> 3)], "little")
-                >> sh) & ((1 << n) - 1)
-
-    ll_state = rd(ll_log)
-    of_state = rd(of_log)
-    ml_state = rd(ml_log)
-    rep = ctx["rep"]
-    lit_pos = 0
-    ll_base, ll_bits = _LL_BASE, _LL_BITS
-    ml_base, ml_bits = _ML_BASE, _ML_BITS
-    for i in range(nbseq):
-        of_code = of_t[of_state][0]
-        if of_code > 31:
-            raise ValueError("zstd: offset code over 31")
-        of_value = (1 << of_code) + rd(of_code)
-        ml_code = ml_t[ml_state][0]
-        ml = ml_base[ml_code] + rd(ml_bits[ml_code])
-        ll_code = ll_t[ll_state][0]
-        ll = ll_base[ll_code] + rd(ll_bits[ll_code])
-        # repeat-offset resolution (RFC 8878 §3.1.1.5)
-        if of_value > 3:
-            offset = of_value - 3
-            rep[2] = rep[1]
-            rep[1] = rep[0]
-            rep[0] = offset
-        else:
-            idx = of_value - 1 if ll != 0 else of_value
-            if idx == 0:
-                offset = rep[0]
-            elif idx == 1:
-                offset = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-            elif idx == 2:
-                offset = rep[2]
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-            else:  # ll == 0 and of_value == 3
-                offset = rep[0] - 1
-                if offset <= 0:
-                    raise ValueError("zstd: repeat offset underflow")
-                rep[2] = rep[1]
-                rep[1] = rep[0]
-                rep[0] = offset
-        if lit_pos + ll > len(literals):
-            raise ValueError("zstd: literals over-consumed")
-        if len(out) + ll + ml > max_output:
-            raise ValueError("zstd: output over the caller's ceiling")
-        out += literals[lit_pos:lit_pos + ll]
-        lit_pos += ll
-        if offset > len(out) - frame_start:
-            raise ValueError("zstd: match offset before frame start")
-        if ml:
-            start = len(out) - offset
-            if offset >= ml:
-                out += out[start:start + ml]
-            else:  # overlapping match: the run repeats itself
-                run = bytes(out[start:])
-                out += (run * (ml // len(run) + 1))[:ml]
-        if i + 1 < nbseq:  # no state update after the last sequence
-            s, nb, base = ll_t[ll_state]
-            ll_state = base + rd(nb)
-            s, nb, base = ml_t[ml_state]
-            ml_state = base + rd(nb)
-            s, nb, base = of_t[of_state]
-            of_state = base + rd(nb)
-    if ptr != 0:
-        raise ValueError("zstd: sequence bitstream not fully consumed")
-    if len(out) + len(literals) - lit_pos > max_output:
-        raise ValueError("zstd: output over the caller's ceiling")
-    out += literals[lit_pos:]
+#: decode in slices of this size, so the output ceiling is checked
+#: between reads instead of reserving ``max_output`` up front
+_READ_CHUNK = 1 << 20
 
 
 def _xxh64(data: bytes, seed: int = 0) -> int:
@@ -626,49 +82,27 @@ def _xxh64(data: bytes, seed: int = 0) -> int:
 
 
 def _data_frame_header(data: bytes, pos: int):
-    """Parse a data-frame header starting AFTER the magic: returns
-    (pos_past_header, fhd, single, checksum, dictionary_id, fcs).
-    The single source of the RFC 8878 §3.1.1.1 size arithmetic
-    (did_size/fcs_size tables, the single-segment 1-byte-FCS special
-    case, the window-descriptor skip), shared by ``decompress`` and
-    ``frame_spans`` so the two can never disagree on where a frame's
-    blocks begin. Semantic validation beyond sizing (reserved bit,
-    dictionary-id rejection) stays with the caller."""
+    """Size a data-frame header starting AFTER the magic: returns
+    (pos_past_header, has_checksum). The RFC 8878 §3.1.1.1 size
+    arithmetic (did_size/fcs_size tables, the single-segment
+    1-byte-FCS special case, the window-descriptor byte); field
+    validation is libzstd's, in ``decompress``."""
     if pos >= len(data):
         raise ValueError("zstd: truncated frame header")
     fhd = data[pos]
-    pos += 1
     single = bool(fhd & 0x20)
-    checksum = bool(fhd & 0x04)
-    did_size = (0, 1, 2, 4)[fhd & 3]
     fcs_size = (0, 2, 4, 8)[fhd >> 6]
     if fhd >> 6 == 0 and single:
         fcs_size = 1
-    if not single:
-        pos += 1  # window descriptor: informational (offsets are
-        # validated against actual decoded history in _decode_block)
-    did = 0
-    if did_size:
-        if pos + did_size > len(data):
-            raise ValueError("zstd: truncated dictionary ID")
-        did = int.from_bytes(data[pos:pos + did_size], "little")
-        pos += did_size
-    fcs = None
-    if fcs_size:
-        if pos + fcs_size > len(data):
-            raise ValueError("zstd: truncated frame content size")
-        fcs = int.from_bytes(data[pos:pos + fcs_size], "little")
-        if fcs_size == 2:
-            fcs += 256
-        pos += fcs_size
-    return pos, fhd, single, checksum, did, fcs
+    pos += 1 + (0 if single else 1) + (0, 1, 2, 4)[fhd & 3] + fcs_size
+    if pos > len(data):
+        raise ValueError("zstd: truncated frame header")
+    return pos, bool(fhd & 0x04)
 
 
 def _block_header(data: bytes, pos: int):
     """Decode one 3-byte block header: returns (pos_past_header,
-    last, btype, bsize). Shared by ``decompress`` and
-    ``frame_spans`` (same can-never-disagree rationale as
-    ``_data_frame_header``); rejects the reserved block type."""
+    last, btype, bsize); rejects the reserved block type."""
     if pos + 3 > len(data):
         raise ValueError("zstd: truncated block header")
     bh = int.from_bytes(data[pos:pos + 3], "little")
@@ -678,109 +112,31 @@ def _block_header(data: bytes, pos: int):
     return pos + 3, last, btype, bsize
 
 
-def decompress(data: bytes, max_output: int = 1 << 28,
-               verify_checksum: bool = False,
-               max_input: int = _MAX_COMPRESSED_INPUT) -> bytes:
+def decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
     """Decode a (possibly multi-frame) zstd stream -> bytes.
 
-    Raises ``ValueError`` on any malformation, on dictionary-requiring
-    frames, and the moment decoded output would exceed ``max_output``
-    (the bomb gate fires mid-decode, not after materializing).
-    ``verify_checksum`` additionally recomputes each frame's XXH64
-    content checksum when present (tests use it; the ingest path skips
-    the extra pass — structure validation already rejects corruption).
-    ``max_input`` bounds the COMPRESSED size (callers with their own
-    budget, like the shard reader, raise it to their ceiling).
-    """
-    if len(data) > max_input:
-        raise ValueError("zstd: compressed input over the decoder's "
-                         "pure-Python ceiling")
-    pos = 0
-    out = bytearray()
-    saw_frame = False
-    skipped_any = False  # a skippable-only stream decodes to b"" —
-    # the reference decoder accepts it, so the probe and the decoder
-    # cannot disagree (review finding r12)
-    while pos < len(data):
-        if pos + 4 > len(data):
-            raise ValueError("zstd: truncated frame magic")
-        (magic,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        if _SKIPPABLE_LO <= magic <= _SKIPPABLE_HI:
-            if pos + 4 > len(data):
-                raise ValueError("zstd: truncated skippable frame")
-            (sz,) = struct.unpack_from("<I", data, pos)
-            pos += 4 + sz
-            if pos > len(data):
-                raise ValueError("zstd: skippable frame overruns input")
-            skipped_any = True
-            continue
-        if magic != _FRAME_MAGIC:
-            raise ValueError("zstd: bad frame magic")
-        saw_frame = True
-        pos, fhd, single, checksum, did, fcs = _data_frame_header(
-            data, pos)
-        if fhd & 0x08:
-            raise ValueError("zstd: reserved frame-header bit set")
-        if did:
-            # an EXPLICIT Dictionary_ID of 0 means "no dictionary"
-            # (RFC 8878 §3.1.1.1.3): such frames are self-contained
-            # and the reference decoder accepts them (r13 review
-            # finding, verified differentially) — only a real
-            # dictionary reference is out of scope here
-            raise ValueError("zstd: dictionary frames unsupported")
-        frame_start = len(out)
-        ctx = {"huf": None, "ll": None, "ml": None, "of": None,
-               "rep": [1, 4, 8]}
-        while True:
-            pos, last, btype, bsize = _block_header(data, pos)
-            if btype == 1:  # RLE: bsize is the REGENERATED size
-                if pos >= len(data):
-                    raise ValueError("zstd: truncated RLE block")
-                if bsize > _BLOCK_MAX:
-                    raise ValueError("zstd: RLE block over maximum")
-                if len(out) + bsize > max_output:
+    Raises ``ValueError`` on any malformation (libzstd's reason in the
+    message), on checksum mismatch, on dictionary-requiring frames, and
+    the moment decoded output would exceed ``max_output`` (at most
+    ``max_output + 1`` bytes are ever decoded)."""
+    import pyarrow as pa
+
+    if not data:
+        raise ValueError("zstd: no zstd frame in input")
+    chunks, total = [], 0
+    try:
+        with pa.input_stream(pa.py_buffer(data),
+                             compression="zstd") as src:
+            while chunk := src.read(
+                    min(_READ_CHUNK, max_output + 1 - total)):
+                total += len(chunk)
+                if total > max_output:
                     raise ValueError(
                         "zstd: output over the caller's ceiling")
-                out += bytes([data[pos]]) * bsize
-                pos += 1
-            else:
-                if bsize > _BLOCK_MAX:
-                    # Block_Maximum_Size applies to Raw and Compressed
-                    # blocks too (the RLE branch already checks): the
-                    # reference decoder rejects oversize blocks, and
-                    # decoding them here made the two disagree on
-                    # validity (r13 review finding — the frame_start
-                    # decodes-where-reference-rejects class)
-                    raise ValueError("zstd: block over maximum size")
-                if pos + bsize > len(data):
-                    raise ValueError("zstd: block overruns input")
-                blk = data[pos:pos + bsize]
-                pos += bsize
-                if btype == 0:
-                    if len(out) + bsize > max_output:
-                        raise ValueError(
-                            "zstd: output over the caller's ceiling")
-                    out += blk
-                else:
-                    _decode_block(blk, out, ctx, max_output,
-                                  frame_start)
-            if last:
-                break
-        if fcs is not None and len(out) - frame_start != fcs:
-            raise ValueError("zstd: frame content size mismatch")
-        if checksum:
-            if pos + 4 > len(data):
-                raise ValueError("zstd: truncated content checksum")
-            if verify_checksum:
-                (want,) = struct.unpack_from("<I", data, pos)
-                got = _xxh64(bytes(out[frame_start:])) & 0xFFFFFFFF
-                if got != want:
-                    raise ValueError("zstd: content checksum mismatch")
-            pos += 4
-    if not saw_frame and not skipped_any:
-        raise ValueError("zstd: no zstd frame in input")
-    return bytes(out)
+                chunks.append(chunk)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"zstd: {e}") from e
+    return b"".join(chunks)
 
 
 def is_zstd(data: bytes) -> bool:
@@ -792,7 +148,7 @@ def is_zstd(data: bytes) -> bool:
         _SKIPPABLE_LO <= magic <= _SKIPPABLE_HI
 
 
-def frame_spans(data: bytes, max_input: int = _MAX_COMPRESSED_INPUT):
+def frame_spans(data: bytes):
     """Yield ``(start, end, is_skippable)`` byte spans for each frame
     of a concatenated zstd stream WITHOUT decoding payloads — the seam
     that lets the CDX member walk treat every data frame of a
@@ -802,15 +158,12 @@ def frame_spans(data: bytes, max_input: int = _MAX_COMPRESSED_INPUT):
     format's seek table).
 
     Only frame and block HEADERS are parsed — sizes are declared, so
-    entropy decode never runs and the walk is O(frames + blocks).
-    Field validation beyond sizing (reserved bits, dictionary IDs,
-    content-size checks) is deliberately left to ``decompress``, which
-    callers run on each yielded span: a span this walk mis-slices can
-    only FAIL there, never decode silently wrong. ValueError on any
-    structural malformation, the decoder's shared contract."""
-    if len(data) > max_input:
-        raise ValueError("zstd: compressed input over the decoder's "
-                         "pure-Python ceiling")
+    the walk is O(frames + blocks). Field validation beyond sizing
+    (reserved bits, dictionary IDs, content-size checks) is left to
+    ``decompress``, which callers run on each yielded span: a span
+    this walk mis-slices can only FAIL there, never decode silently
+    wrong. ValueError on any structural malformation, the decoder's
+    shared contract."""
     if not data:
         # mirror decompress's empty-input contract so the two can
         # never disagree on acceptance (differential fuzz pin)
@@ -833,8 +186,7 @@ def frame_spans(data: bytes, max_input: int = _MAX_COMPRESSED_INPUT):
             continue
         if magic != _FRAME_MAGIC:
             raise ValueError("zstd: bad frame magic")
-        pos, _fhd, _single, checksum, _did, _fcs = _data_frame_header(
-            data, pos)
+        pos, checksum = _data_frame_header(data, pos)
         while True:
             pos, last, btype, _bsize = _block_header(data, pos)
             pos += 1 if btype == 1 else _bsize
@@ -857,11 +209,12 @@ def compress_store(data: bytes, checksum: bool = True) -> bytes:
     The write half of the per-record-frame ``.warc.zst`` layout: each
     record becomes its own self-contained frame, which is exactly what
     ``frame_spans`` / ``warc_member_index`` need to make the archive
-    seekable. Store mode is deliberate — the engine's decoder is
-    pure-Python and the layout's value is SEEKABILITY, not ratio; any
-    real zstd tool re-compresses frames losslessly if ratio matters.
-    ``checksum`` appends the XXH64 content checksum so
-    ``decompress(verify_checksum=True)`` validates round trips."""
+    seekable. Store mode is deliberate: the layout's value is
+    SEEKABILITY and byte-stable output — the same records always give
+    the same archive bytes, independent of any encoder's version or
+    level — not ratio; any real zstd tool re-compresses frames
+    losslessly if ratio matters. ``checksum`` appends the XXH64
+    content checksum, which ``decompress`` verifies."""
     n = len(data)
     out = bytearray(struct.pack("<I", _FRAME_MAGIC))
     chk = 0x04 if checksum else 0x00
@@ -895,7 +248,7 @@ def seek_table(frames: "list[tuple[int, int]]") -> bytes:
     decompressed_size) u32 pairs, then a 9-byte footer of
     frame count + descriptor + magic 0x8F92EAB1). Appending it to a
     per-record-frame archive makes the file seekable by EXTERNAL
-    zstd-seekable tooling; this decoder and ``frame_spans`` already
+    zstd-seekable tooling; ``decompress`` and ``frame_spans`` already
     pass over skippable frames, so every in-engine read path is
     unaffected."""
     body = bytearray()
