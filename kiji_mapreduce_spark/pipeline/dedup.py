@@ -821,11 +821,19 @@ def hamming64(a: Column, b: Column) -> Column:
 def connected_keep_ids(pairs: DataFrame, id_a: str = "id_a",
                        id_b: str = "id_b", max_iters: int = 10) -> DataFrame:
     """Collapse near-dup pair edges into groups and pick one survivor
-    per group (the minimum id): min-label propagation with pointer
-    jumping — each round takes the min over neighbors' labels AND
-    follows ``keep_id -> keep_id's own label``, so chain depth halves
-    per round and convergence is O(log diameter), not O(diameter). A
-    10-round budget covers components of diameter ~2^10.
+    per group (the minimum id): min-label propagation with parent
+    hooking and pointer jumping. Each round every node takes the
+    smallest label in its closed neighbourhood, HOOKS its parent (the
+    node its old label names) to that value too, and then jumps to its
+    hooked parent's hooked label (Shiloach–Vishkin-style conditional
+    hooking plus shortcutting). The hook is what makes the jump pay
+    off: without it a parent never hears what its children saw, so a
+    new minimum crosses one edge per round and a path whose ids are not
+    monotone needs O(diameter) rounds (a shuffled 12-node path took 11).
+    With it, a 10-round budget covers components of diameter ~2^10:
+    1,000-node paths (monotone or shuffled), cycles and random trees
+    converge in at most 10 rounds, and no graph of at most 41 nodes and
+    60 edges found by search needs more than 6.
 
     Raises if the labels are still changing after ``max_iters`` rounds
     (silently-unconverged labels would split one duplicate group into
@@ -853,41 +861,42 @@ def connected_keep_ids(pairs: DataFrame, id_a: str = "id_a",
     labels = (edges.groupBy("src").agg(F.min("dst").alias("_m"))
               .select(F.col("src").alias("doc_id"),
                       F.least("src", "_m").alias("keep_id")))
+    no_id = F.lit(None).cast(edges.schema["src"].dataType)  # ids: any type
     changed = None
     for _ in range(max_iters):
-        neighbor_min = (edges.join(
-            labels.withColumnRenamed("doc_id", "dst")
-                  .withColumnRenamed("keep_id", "_nb"), on="dst")
-            .groupBy("src").agg(F.min("_nb").alias("_min_nb")))
-        stepped = (labels.join(
-            neighbor_min.withColumnRenamed("src", "doc_id"),
-            on="doc_id", how="left")
-            .select("doc_id", F.col("keep_id").alias("_old"), F.least(
-                F.col("keep_id"),
-                F.coalesce(F.col("_min_nb"), F.col("keep_id"))
-            ).alias("keep_id")))
-        # pointer jumping: keep_id <- min(keep_id, label(keep_id));
-        # the changed flag rides the same plan so convergence costs a
-        # scan of the checkpointed partitions, not another join. The
-        # jump table is the PREVIOUS round's (checkpointed) labels,
-        # not `stepped` itself: a stepped self-join duplicated the
-        # whole stepped subtree (2 joins + the init aggregate) in
-        # every round's plan — the two sides shuffle by different
-        # keys, so Spark cannot reuse the exchange (r15; guide §2.4).
-        # The one-round-delayed jump still doubles reach per round
-        # (reach_t >= 2*reach_{t-1}+1), converges to the identical
-        # unique fixpoint (every label is the component minimum), and
-        # the changed==0 confirmation is unchanged.
-        # In round 1 ``labels`` is the lazy seed aggregate, so it runs
-        # twice there; it reads only the checkpointed edges, which is
-        # cheaper than a dedicated pin job.
-        parent = labels.select(F.col("doc_id").alias("keep_id"),
-                               F.col("keep_id").alias("_pk"))
-        new_labels = (stepped.join(parent, on="keep_id", how="left")
-                      .select("doc_id", "_old", F.least(
-                          F.col("keep_id"),
-                          F.coalesce(F.col("_pk"), F.col("keep_id"))
-                      ).alias("keep_id"))
+        # (v, label of each neighbour) plus (v, own label): one
+        # aggregate yields the closed-neighbourhood min AND the old label
+        seen = (edges.join(labels.withColumnRenamed("doc_id", "dst"),
+                           on="dst")
+                .select(F.col("src").alias("doc_id"),
+                        F.col("keep_id").alias("_l"), no_id.alias("_old")))
+        own = labels.select("doc_id", F.col("keep_id").alias("_l"),
+                            F.col("keep_id").alias("_old"))
+        stepped = (seen.unionByName(own).groupBy("doc_id")
+                   .agg(F.min("_l").alias("_st"), F.max("_old").alias("_old")))
+        # parent hooking: the min each node saw goes to the node itself
+        # AND to its parent, in one explode + aggregate (no join); every
+        # node keeps its old label through its own entry
+        hooked = (stepped.select(F.explode(F.array(
+            F.struct("doc_id", "_st", "_old"),
+            F.struct(F.col("_old").alias("doc_id"), "_st",
+                     no_id.alias("_old")),
+        )).alias("h")).select("h.*").groupBy("doc_id")
+            .agg(F.min("_st").alias("_p"), F.max("_old").alias("_old")))
+        # pointer jumping through the hooked parents: keep_id <-
+        # min(p(v), p(p(v))). The jump table must be THIS round's hooked
+        # labels: jumping through last round's checkpointed labels drops
+        # the hook (shuffled 1,000-node paths then take up to 13
+        # rounds, not 10). The jump side re-runs the explode and the
+        # hook aggregate over the reused neighbourhood shuffle. The
+        # changed flag rides the same plan, so convergence costs a scan
+        # of the checkpointed partitions
+        parent = hooked.select(F.col("doc_id").alias("_p"),
+                               F.col("_p").alias("_pp"))
+        new_labels = (hooked.join(parent, on="_p", how="left")
+                      .select("doc_id", F.least(
+                          F.col("_p"), F.coalesce(F.col("_pp"), F.col("_p"))
+                      ).alias("keep_id"), "_old")
                       .withColumn("_chg", F.col("keep_id") != F.col("_old"))
                       .drop("_old")
                       .localCheckpoint(eager=True))

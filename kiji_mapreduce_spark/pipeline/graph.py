@@ -22,8 +22,8 @@ irrelevant for ranking and keeps the per-round plan to one join + one
 aggregate.
 
 Connected components lives in ``dedup.connected_keep_ids`` (min-label
-propagation with pointer jumping); this module holds the rank-style
-iterations.
+propagation with parent hooking and pointer jumping); this module
+holds the rank-style iterations.
 """
 
 from __future__ import annotations

@@ -41,61 +41,6 @@ from kiji_mapreduce_spark.suite.queries_text import _BM25_QUERIES
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # -- A query leaves the registry only by an endorsed retirement,
     #    and its q_ function and oracle SQL leave the package with it. --
-    "dedup_exact_substring": q_dedup_exact_substring,
-    "robots_filter": q_robots_filter,
-    "dsir_log_weights": q_dsir_log_weights,
-    "shard_ingest_members": q_shard_ingest_members,
-    "dedup_boilerplate_strip": q_dedup_boilerplate_strip,
-    "image_near_duplicates": q_image_near_duplicates,
-    "knn_sq8_topk": q_knn_sq8_topk,
-    "knn_pq_topk": q_knn_pq_topk,
-    "knn_recall_ivf": q_knn_recall_ivf,
-    "streaming_drift_psi": q_streaming_drift_psi,
-    "text_fingerprint": q_text_fingerprint,
-    "text_quality": q_text_quality,
-    "text_chunking": q_text_chunking,
-    "dedup_exact": q_dedup_exact,
-    "dedup_minhash_pairs": q_dedup_minhash_pairs,
-    "kmv_distinct_users": q_kmv_distinct_users,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_repeated_ngrams": q_dedup_repeated_ngrams,
-    "pagerank_nation_trade": q_pagerank_nation_trade,
-    "entity_resolution_blocked": q_entity_resolution,
-    "streaming_sessionize": q_streaming_sessionize,
-    "mixture_temperature": q_mixture_temperature,
-    "weighted_sample_topk": q_weighted_sample,
-    "hard_negative_mining": q_hard_negative_mining,
-    "decontaminate_overlap": q_decontaminate_overlap,
-    "decontaminate_spans": q_decontaminate_spans,
-    "streaming_windowed_counts": q_streaming_windowed_counts,
-    "kvstore_avro_file_join": q_kvstore_avro_file_join,
-    "versioned_slice_maxversions": q_versioned_slice_maxversions,
-    "map_family_regex_filter": q_map_family_regex_filter,
-    "asof_join_purchase_click": q_asof_join_purchase_click,
-    "range_join_price_bands": q_range_join_price_bands,
-    "embedding_label_cosine_stats": q_embedding_label_cosine_stats,
-    "quantiles_order_price": q_quantiles_order_price,
-    "sql_surface_big_spenders": q_sql_surface_big_spenders,
-    "grouping_sets_orders": q_grouping_sets_orders,
-    "wordcount_top50": q_wordcount_top50,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "pivot_wide_event_values": q_pivot_wide_event_values,
-    "array_agg_priorities": q_array_agg_priorities,
-    "events_json_props": q_events_json_props,
-    "timeseries_gapfill": q_timeseries_gapfill,
-    "snapshot_diff_orders": q_snapshot_diff_orders,
-    "data_quality_audit": q_data_quality_audit,
-    "embedding_near_dups": q_embedding_near_dups,
-    "text_repetition": q_text_repetition,
-    "text_pii": q_text_pii,
-    "multimodal_features": q_multimodal_features,
-    "streaming_interval_join": q_streaming_interval_join,
-    "text_token_count": q_text_token_count,
-    # ---- window boundary (driver verifies the 50 entries above;
-    #      tests/test_suite_smoke.py::test_window_boundary_comment pins
-    #      this comment to position 50) ----
-    # -- tail: the 50 r13-green queries (CORRECTNESS_r13 50/50; these
-    #    were the r13 window and rotate back in no later than r15) --
     "c4_filter": q_c4_filter,
     "pipeline_curate": q_pipeline_curate,
     "collocations_top": q_collocations_top,
@@ -146,69 +91,122 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "countmin_heavy_hitters": q_countmin_heavy_hitters,
     "crawl_registered_domain": q_crawl_registered_domain,
     "crawl_html_extract": q_crawl_html_extract,
+    # ---- window boundary (driver verifies the 50 entries above;
+    #      tests/test_suite_smoke.py::test_window_boundary_comment pins
+    #      this comment to position 50) ----
+    # -- tail: the 50 r15-green queries (CORRECTNESS_r14 and _r15 50/50;
+    #    these were the r14/r15 window and rotate back in next round) --
+    "dedup_exact_substring": q_dedup_exact_substring,
+    "robots_filter": q_robots_filter,
+    "dsir_log_weights": q_dsir_log_weights,
+    "shard_ingest_members": q_shard_ingest_members,
+    "dedup_boilerplate_strip": q_dedup_boilerplate_strip,
+    "image_near_duplicates": q_image_near_duplicates,
+    "knn_sq8_topk": q_knn_sq8_topk,
+    "knn_pq_topk": q_knn_pq_topk,
+    "knn_recall_ivf": q_knn_recall_ivf,
+    "streaming_drift_psi": q_streaming_drift_psi,
+    "text_fingerprint": q_text_fingerprint,
+    "text_quality": q_text_quality,
+    "text_chunking": q_text_chunking,
+    "dedup_exact": q_dedup_exact,
+    "dedup_minhash_pairs": q_dedup_minhash_pairs,
+    "kmv_distinct_users": q_kmv_distinct_users,
+    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
+    "dedup_repeated_ngrams": q_dedup_repeated_ngrams,
+    "pagerank_nation_trade": q_pagerank_nation_trade,
+    "entity_resolution_blocked": q_entity_resolution,
+    "streaming_sessionize": q_streaming_sessionize,
+    "mixture_temperature": q_mixture_temperature,
+    "weighted_sample_topk": q_weighted_sample,
+    "hard_negative_mining": q_hard_negative_mining,
+    "decontaminate_overlap": q_decontaminate_overlap,
+    "decontaminate_spans": q_decontaminate_spans,
+    "streaming_windowed_counts": q_streaming_windowed_counts,
+    "kvstore_avro_file_join": q_kvstore_avro_file_join,
+    "versioned_slice_maxversions": q_versioned_slice_maxversions,
+    "map_family_regex_filter": q_map_family_regex_filter,
+    "asof_join_purchase_click": q_asof_join_purchase_click,
+    "range_join_price_bands": q_range_join_price_bands,
+    "embedding_label_cosine_stats": q_embedding_label_cosine_stats,
+    "quantiles_order_price": q_quantiles_order_price,
+    "sql_surface_big_spenders": q_sql_surface_big_spenders,
+    "grouping_sets_orders": q_grouping_sets_orders,
+    "wordcount_top50": q_wordcount_top50,
+    "tfidf_top_terms": q_tfidf_top_terms,
+    "pivot_wide_event_values": q_pivot_wide_event_values,
+    "array_agg_priorities": q_array_agg_priorities,
+    "events_json_props": q_events_json_props,
+    "timeseries_gapfill": q_timeseries_gapfill,
+    "snapshot_diff_orders": q_snapshot_diff_orders,
+    "data_quality_audit": q_data_quality_audit,
+    "embedding_near_dups": q_embedding_near_dups,
+    "text_repetition": q_text_repetition,
+    "text_pii": q_text_pii,
+    "multimodal_features": q_multimodal_features,
+    "streaming_interval_join": q_streaming_interval_join,
+    "text_token_count": q_text_token_count,
 }
 
 
 #: Names that MUST sit inside the driver's first-50 verification window
-#: this round (r14): dedup_exact_substring + robots_filter (r14-NEW —
-#: new-first policy) and dsir_log_weights (its r13 NEW_PENDING
-#: exemption expired) plus the 47 remaining r12-green queries at the
-#: 2-round freshness cap (stalest-first, update_verified.py's emitted
-#: order, minus the two judge-endorsed retirements). Mechanically
-#: enforced by
+#: this round (r16): the 50 r13-green queries at the 2-round freshness
+#: cap (r14 and r15 both re-verified the same 50, so these aged out
+#: unrotated), stalest-first in update_verified.py's emitted order.
+#: Mechanically enforced by
 #: tests/test_suite_smoke.py::test_first_window_membership —
 #: hand-ordered dict entries alone proved too fragile (ADVICE r3).
 FIRST_WINDOW_REQUIRED: list[str] = [
-    "dedup_exact_substring",
-    "robots_filter",
-    "dsir_log_weights",
-    "shard_ingest_members",
-    "dedup_boilerplate_strip",
-    "image_near_duplicates",
-    "knn_sq8_topk",
-    "knn_pq_topk",
-    "knn_recall_ivf",
-    "streaming_drift_psi",
-    "text_fingerprint",
-    "text_quality",
-    "text_chunking",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "kmv_distinct_users",
-    "dedup_ngram_jaccard",
-    "dedup_repeated_ngrams",
-    "pagerank_nation_trade",
-    "entity_resolution_blocked",
-    "streaming_sessionize",
-    "mixture_temperature",
-    "weighted_sample_topk",
-    "hard_negative_mining",
-    "decontaminate_overlap",
-    "decontaminate_spans",
-    "streaming_windowed_counts",
-    "kvstore_avro_file_join",
-    "versioned_slice_maxversions",
-    "map_family_regex_filter",
-    "asof_join_purchase_click",
-    "range_join_price_bands",
-    "embedding_label_cosine_stats",
-    "quantiles_order_price",
-    "sql_surface_big_spenders",
-    "grouping_sets_orders",
-    "wordcount_top50",
-    "tfidf_top_terms",
-    "pivot_wide_event_values",
-    "array_agg_priorities",
-    "events_json_props",
-    "timeseries_gapfill",
-    "snapshot_diff_orders",
-    "data_quality_audit",
-    "embedding_near_dups",
-    "text_repetition",
-    "text_pii",
-    "multimodal_features",
-    "streaming_interval_join",
-    "text_token_count",
+    "c4_filter",
+    "pipeline_curate",
+    "collocations_top",
+    "video_near_duplicates",
+    "audio_near_duplicates",
+    "text_langid",
+    "classifier_score_topk",
+    "drift_orders_price",
+    "split_train_test",
+    "split_leakage",
+    "negative_sample_vocab",
+    "dedup_simhash_pairs",
+    "dedup_source_matrix",
+    "knn_ivf_topk",
+    "knn_lsh_topk",
+    "cell_rewrite_int_to_long",
+    "lm_bigram_quality",
+    "streaming_dedup_docs",
+    "bm25_search_topk",
+    "text_normalize",
+    "sample_stratified",
+    "sample_stratum_topk",
+    "events_anomaly_zscore",
+    "mixture_token_budget",
+    "pack_documents",
+    "kmeans_clusters",
+    "salted_topk_events",
+    "sample_cluster_balanced",
+    "gather_pricing_summary",
+    "filter_pushdown_revenue",
+    "kvstore_lookup_join",
+    "semi_join_customers_with_orders",
+    "anti_join_customers_without_orders",
+    "join_revenue_by_nation",
+    "producer_price_band",
+    "pivot_orders_by_customer",
+    "bulk_import_props",
+    "window_top3_orders_per_customer",
+    "set_ops_nations",
+    "rollup_revenue",
+    "mapreduce_event_stats",
+    "topk_shipping_priority",
+    "cube_order_stats",
+    "distinct_segments",
+    "window_running_revenue",
+    "dedup_corpus_survivors",
+    "dedup_incremental_pairs",
+    "countmin_heavy_hitters",
+    "crawl_registered_domain",
+    "crawl_html_extract",
 ]
 
 # The window has zero slack (every tail query sits at the 2-round
@@ -224,8 +222,9 @@ FIRST_WINDOW_REQUIRED: list[str] = [
 #: new/changed-first policy) or the test fails, so the exemption
 #: self-expires and cannot become a parking lot.
 #:
-#: Empty as of r14: dsir_log_weights (r13) took its mandated window
-#: slot in the r14 rotation, closing the exemption.
+#: Empty as of r16: dsir_log_weights (r13) took its mandated window
+#: slot in the r14 rotation, closing the exemption, and no query has
+#: been added since.
 NEW_PENDING_WINDOW: dict[str, int] = {}
 
 #: Transplant-ready seat candidates NOT in QUERIES (seating needs a
