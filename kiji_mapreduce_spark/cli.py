@@ -723,10 +723,6 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                     "append the batch's codes — the batch twin of "
                     "streaming.stream_media_dedup; absent dir is "
                     "created (first ingest)")
-    md.add_argument("--fake-decoder", action="store_true",
-                    help="hash deterministic pseudo-pixels/energies "
-                    "instead of decoding (for formats without a "
-                    "bundled codec)")
     md.add_argument("--skip-undecodable", action="store_true",
                     help="drop NULL/undecodable rows (NULL fingerprint) "
                     "instead of failing the job on one bad blob")
@@ -1884,7 +1880,6 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                     media, index, args.kind, args.content_col,
                     args.id_col, args.every_n, args.max_hamming,
                     args.bands, args.min_frames,
-                    use_real_decoder=not args.fake_decoder,
                     skip_undecodable=args.skip_undecodable,
                     return_codes=True)
             except ValueError as e:
@@ -1918,7 +1913,6 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                     id_col=args.id_col, every_n=args.every_n,
                     max_hamming=args.max_hamming, bands=args.bands,
                     min_frames=args.min_frames,
-                    use_real_decoder=not args.fake_decoder,
                     skip_undecodable=args.skip_undecodable)
             else:
                 fn = (multimodal.image_near_duplicates
@@ -1928,7 +1922,6 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                            id_col=args.id_col,
                            max_hamming=args.max_hamming,
                            bands=args.bands,
-                           use_real_decoder=not args.fake_decoder,
                            skip_undecodable=args.skip_undecodable)
         except ValueError as e:
             # banded_hamming_pairs rejects max_hamming >= bands (the

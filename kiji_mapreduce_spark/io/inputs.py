@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kiji_mapreduce_spark.io import zstd_codec
+from kiji_mapreduce_spark.io import brotli_codec, zstd_codec
 from kiji_mapreduce_spark.request import DataRequest
 
 
@@ -494,9 +494,8 @@ def _inflate_http_body(data: bytes, wbits: int):
 def _decode_http_payload(body: bytes) -> bytes:
     """Normalize an HTTP-response WARC payload to identity encoding:
     de-chunk ``Transfer-Encoding: chunked`` framing and inflate
-    ``Content-Encoding: gzip/x-gzip/deflate/zstd`` bodies (``br`` when
-    a system libbrotlidec exists), each under the ``_MAX_INFLATE``
-    output ceiling, dropping the now-stale encoding + Content-Length
+    ``Content-Encoding: gzip/x-gzip/deflate/zstd/br`` bodies, each under
+    the ``_MAX_INFLATE`` output ceiling, dropping the now-stale encoding + Content-Length
     headers. Crawls store responses AS CAPTURED, so without this the
     downstream Catalyst text extractor would strip tags out of gzip
     bytes and emit garbage.
@@ -551,28 +550,14 @@ def _decode_http_payload(body: bytes) -> bytes:
         coding = enc.group(1).lower()
         if coding in (b"gzip", b"x-gzip"):
             inflated = _inflate_http_body(decoded, wbits=47)
-        elif coding == b"br":
-            # system-libbrotlidec path (io.brotli_codec): the format's
-            # static dictionary is data, not derivable spec, so there
-            # is no from-scratch fallback — without the library the
-            # body passes through and the crawl's still-encoded gate
-            # rejects-and-counts it exactly as before
-            from kiji_mapreduce_spark.io import brotli_codec
-
-            inflated = None
-            if brotli_codec.available():
-                try:
-                    inflated = brotli_codec.decompress(
-                        decoded, max_output=_MAX_INFLATE)
-                except ValueError:
-                    inflated = None
-        elif coding == b"zstd":
-            # pyarrow's libzstd (io.zstd_codec): C speed, so like gzip
-            # only the decoded size is capped — a bomb past
-            # _MAX_INFLATE passes through still encoded for the crawl
-            # gate to reject-and-count
+        elif coding in (b"br", b"zstd"):
+            # pyarrow's bundled brotli/libzstd (io.brotli_codec,
+            # io.zstd_codec): C speed, so like gzip only the decoded
+            # size is capped — a bomb past _MAX_INFLATE passes through
+            # still encoded for the crawl gate to reject-and-count
+            codec = brotli_codec if coding == b"br" else zstd_codec
             try:
-                inflated = zstd_codec.decompress(
+                inflated = codec.decompress(
                     decoded, max_output=_MAX_INFLATE)
             except ValueError:
                 inflated = None
@@ -590,8 +575,7 @@ def _decode_http_payload(body: bytes) -> bytes:
 
 
 def read_warc_records(spark: SparkSession, paths: list[str],
-                      lenient: bool = False,
-                      decode_http: bool = True) -> DataFrame:
+                      lenient: bool = False) -> DataFrame:
     """WARC web-archive records as rows — the format crawl corpora
     (Common Crawl) actually ship in: (path, record_no, warc_type,
     target_uri, warc_date, record_id, content_length, content binary).
@@ -604,16 +588,15 @@ def read_warc_records(spark: SparkSession, paths: list[str],
     the framed records leave the parser; body payloads stay binary
     (HTTP headers + content) for downstream extractors to decode.
 
-    ``decode_http`` (default on) normalizes HTTP response payloads to
-    identity encoding (see ``_decode_http_payload``): crawls capture
-    chunked/gzipped responses verbatim, and tag-stripping gzip bytes
-    yields garbage text. ``content_length`` stays the RECORD's original
-    framed length (the WARC-side fact); ``content`` holds the
-    normalized payload.
+    HTTP response payloads are normalized to identity encoding (see
+    ``_decode_http_payload``): crawls capture chunked/gzipped responses
+    verbatim, and tag-stripping gzip bytes yields garbage text.
+    ``content_length`` stays the RECORD's original framed length (the
+    WARC-side fact); ``content`` holds the normalized payload. For the
+    captured bytes verbatim, read with ``read_warc_raw``.
     """
     files = spark.read.format("binaryFile").load(paths)
-    return warc_records_from_files(files, lenient=lenient,
-                                   decode_http=decode_http)
+    return warc_records_from_files(files, lenient=lenient)
 
 
 #: binaryFile source schema — needed explicitly for readStream (file
@@ -622,8 +605,8 @@ BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
                       "length long, content binary")
 
 
-def warc_records_from_files(files: DataFrame, lenient: bool = False,
-                            decode_http: bool = True) -> DataFrame:
+def warc_records_from_files(files: DataFrame,
+                            lenient: bool = False) -> DataFrame:
     """The parser half of ``read_warc_records``, over an existing
     (path, content) DataFrame — shared by the batch reader and the
     streaming crawl ingest (whose micro-batches arrive as binaryFile
@@ -646,8 +629,7 @@ def warc_records_from_files(files: DataFrame, lenient: bool = False,
             for path, content in zip(pdf["path"], pdf["content"]):
                 rows = {k: [] for k in cols}
                 for rec in _parse_warc(bytes(content), path, lenient):
-                    if decode_http:
-                        rec = rec[:-1] + (_decode_http_payload(rec[-1]),)
+                    rec = rec[:-1] + (_decode_http_payload(rec[-1]),)
                     rows["path"].append(path)
                     for key, val in zip(cols[1:], rec):
                         rows[key].append(val)
@@ -1038,7 +1020,6 @@ def _open_range_source(resolved: str):
 
 def warc_records_from_ranges(ranges: DataFrame, base: str = "",
                              lenient: bool = False,
-                             decode_http: bool = True,
                              stripe_bytes: int = 1 << 30) -> DataFrame:
     """Fetch and parse ONLY the WARC byte ranges a crawl index names —
     the read half of the index-first 100 TB pattern (``read_cdx`` is
@@ -1198,9 +1179,7 @@ def warc_records_from_ranges(ranges: DataFrame, base: str = "",
                     # applies as everywhere else
                     for rec in _frame_warc_records([raw], where,
                                                    lenient):
-                        if decode_http:
-                            rec = rec[:-1] + (
-                                _decode_http_payload(rec[-1]),)
+                        rec = rec[:-1] + (_decode_http_payload(rec[-1]),)
                         acc["path"].append(resolved)
                         acc["offset"].append(off)
                         for key, val in zip(cols, rec):

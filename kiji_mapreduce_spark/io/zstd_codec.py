@@ -119,23 +119,33 @@ def decompress(data: bytes, max_output: int = 1 << 28) -> bytes:
     message), on checksum mismatch, on dictionary-requiring frames, and
     the moment decoded output would exceed ``max_output`` (at most
     ``max_output + 1`` bytes are ever decoded)."""
+    return arrow_decompress(data, "zstd", max_output)
+
+
+def arrow_decompress(data: bytes, compression: str,
+                     max_output: int) -> bytes:
+    """Decode ``data`` through pyarrow's bundled ``compression`` library
+    (``"zstd"`` here, ``"brotli"`` in ``brotli_codec``) in
+    ``_READ_CHUNK`` slices, raising ``ValueError`` on empty input, on
+    any library error, and once output would exceed ``max_output``."""
     import pyarrow as pa
 
     if not data:
-        raise ValueError("zstd: no zstd frame in input")
+        raise ValueError(f"{compression}: empty input")
     chunks, total = [], 0
     try:
         with pa.input_stream(pa.py_buffer(data),
-                             compression="zstd") as src:
+                             compression=compression) as src:
             while chunk := src.read(
                     min(_READ_CHUNK, max_output + 1 - total)):
                 total += len(chunk)
                 if total > max_output:
                     raise ValueError(
-                        "zstd: output over the caller's ceiling")
+                        f"{compression}: output over the caller's "
+                        "ceiling")
                 chunks.append(chunk)
     except (OSError, pa.ArrowException) as e:
-        raise ValueError(f"zstd: {e}") from e
+        raise ValueError(f"{compression}: {e}") from e
     return b"".join(chunks)
 
 

@@ -1044,6 +1044,35 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {max_hamming}
 """
 
 
+def doc_pixels_cte(source: str = "documents",
+                   id_col: str = "doc_id") -> str:
+    """``WITH toks, px``: per document the synthesized 8x9 grayscale
+    bitmap ``p`` (pixel i = md5-60bit(token[i mod n]) % 256, documents
+    with no tokens dropped) — the DuckDB twin of the suite's
+    ``_doc_png_images``, shared by the image-query oracles."""
+    return f"""WITH toks AS (SELECT {id_col}, {_toks()} AS t FROM {source}),
+px AS (
+  SELECT {id_col},
+         list_transform(range(0, 72),
+           i -> {_md5h('t[(i % len(t)) + 1]')} % 256) AS p
+  FROM toks WHERE len(t) >= 1
+)"""
+
+
+def multimodal_features_sql() -> str:
+    """Mirror of the suite's feature query: ``extract_features(dim=8)``
+    is an 8-bin luminance histogram over the 72 decoded pixels, so f0
+    and f1 are the fractions of pixels in [0, 32) and [32, 64)."""
+    return f"""
+{doc_pixels_cte()}
+SELECT doc_id AS media_id,
+       round(len(list_filter(p, v -> v < 32)) / 72.0, 6) AS f0,
+       round(len(list_filter(p, v -> v >= 32 AND v < 64)) / 72.0, 6) AS f1,
+       8 AS dim
+FROM px
+"""
+
+
 def image_near_dup_sql(max_hamming: int = 3, bands: int = 4,
                        source: str = "documents",
                        id_col: str = "doc_id") -> str:
@@ -1056,17 +1085,10 @@ def image_near_dup_sql(max_hamming: int = 3, bands: int = 4,
     hash identical bitmaps. Bit 63 is the sign bit — its term adds the
     BIGINT minimum — and band chunks mask AFTER the shift, so
     arithmetic-vs-logical shift on negative codes cannot differ."""
-    width = 64 // bands
     fp_sum = _dhash_sum("p")  # byte-identical to the pre-r7 inline terms
     band_rows = _band_chunk_rows(id_col, "ph", bands)
     return f"""
-WITH toks AS (SELECT {id_col}, {_toks()} AS t FROM {source}),
-px AS (
-  SELECT {id_col},
-         list_transform(range(0, 72),
-           i -> {_md5h('t[(i % len(t)) + 1]')} % 256) AS p
-  FROM toks WHERE len(t) >= 1
-),
+{doc_pixels_cte(source, id_col)},
 fp AS (SELECT {id_col}, ({fp_sum})::BIGINT AS ph FROM px),
 entries AS (
 {band_rows}

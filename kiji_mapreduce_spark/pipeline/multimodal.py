@@ -9,8 +9,10 @@ progressive, incl. 4:2:0 and restart intervals), GIF (static +
 animated), lossless WebP (VP8L, all transforms), PCM WAV, and the
 Motion-PNG clip container; PIL, when installed, widens image coverage
 (lossy VP8 WebP, arithmetic JPEG, ...), and everything else raises
-``DecoderNotAvailable`` loudly (MP4/WebM video -> ffmpeg territory). Deterministic fakes remain for
-tests that want pixel-exact oracles without a codec round-trip.
+``DecoderNotAvailable`` loudly (MP4/WebM video -> ffmpeg territory).
+Every operator here decodes; there is no hash-of-the-bytes stand-in,
+so undecodable content either raises or, where the operator takes
+``skip_undecodable``, is dropped.
 
 Design notes for 100 TB of media:
 - media bytes travel in their own column so Parquet column pruning skips
@@ -24,8 +26,6 @@ Design notes for 100 TB of media:
 
 from __future__ import annotations
 
-import hashlib
-import struct as _struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -150,19 +150,19 @@ def _decode_image_real(content: bytes):
             f"PIL could not decode the image bytes: {e}") from e
 
 
-def _fake_feature(content: bytes, dim: int) -> list[float]:
-    """Deterministic fake embedding: bytes of sha256(content) -> [-1, 1)."""
-    out: list[float] = []
-    counter = 0
-    while len(out) < dim:
-        h = hashlib.sha256(content + counter.to_bytes(4, "big")).digest()
-        for i in range(0, len(h) - 3, 4):
-            (v,) = _struct.unpack(">I", h[i:i + 4])
-            out.append(v / 2147483648.0 - 1.0)
-            if len(out) == dim:
-                break
-        counter += 1
-    return out
+def _decode_clip(raw: bytes):
+    """Frames (uint8 ndarrays) of a natively decodable clip —
+    Motion-PNG, animated GIF, animated lossless WebP; MP4/WebM raise
+    ``DecoderNotAvailable`` (ffmpeg territory)."""
+    from kiji_mapreduce_spark.pipeline import media_codecs
+
+    if raw[:4] != b"MPNG" and raw[:6] not in media_codecs._GIF_MAGICS \
+            and not media_codecs.is_webp(raw):
+        raise DecoderNotAvailable(
+            "MP4/WebM video requires ffmpeg, not bundled; Motion-PNG, "
+            "animated GIF and animated lossless WebP decode natively")
+    frames, _micros = media_codecs.decode_video(raw)
+    return frames
 
 
 def attach_media_meta(df: DataFrame, content_col: str = "content",
@@ -181,20 +181,18 @@ def attach_media_meta(df: DataFrame, content_col: str = "content",
 
 
 def extract_features(df: DataFrame, content_col: str = "content",
-                     id_col: str = "media_id", dim: int = 16,
-                     use_real_decoder: bool = False) -> DataFrame:
+                     id_col: str = "media_id",
+                     dim: int = 16) -> DataFrame:
     """mapInPandas feature extraction: (id, feature array<double>).
 
-    The UDF receives Arrow record batches; with real decoders this is
-    where PIL/torchvision would run. The fake path is deterministic so
-    tests can assert exact values.
+    The feature is a ``dim``-bin normalized luminance histogram of the
+    decoded pixels — deterministic, library-free, and derived from image
+    content (the stand-in for a vision-model embedding, which would run
+    in the same UDF over the same Arrow batches).
     """
     schema = f"{id_col} long, feature array<double>"
 
-    def _real_feature(content: bytes, dim: int) -> list[float]:
-        """Decoded-pixel feature: a dim-bin normalized luminance
-        histogram — deterministic, library-free, and actually derived
-        from image content (the stand-in for a vision-model embedding)."""
+    def _feature(content: bytes) -> list[float]:
         import numpy as np
 
         pixels, _w, _h = _decode_image_real(content)
@@ -204,9 +202,8 @@ def extract_features(df: DataFrame, content_col: str = "content",
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            fn = _real_feature if use_real_decoder else _fake_feature
             feats = [
-                fn(bytes(c) if c is not None else b"", dim)
+                _feature(bytes(c) if c is not None else b"")
                 for c in pdf[content_col]
             ]
             yield pd.DataFrame({id_col: pdf[id_col], "feature": feats})
@@ -232,7 +229,6 @@ def _dhash64(lum) -> int:
 
 def phash64(df: DataFrame, content_col: str = "content",
             id_col: str = "media_id",
-            use_real_decoder: bool = False,
             skip_undecodable: bool = False) -> DataFrame:
     """64-bit perceptual difference-hash (dHash — Krawetz's public
     "Kind of Like That" method): decode -> luminance -> nearest-neighbor
@@ -246,10 +242,9 @@ def phash64(df: DataFrame, content_col: str = "content",
     reference's ``produce()`` derived column — KijiProducer.java:101,
     140-183 — over a binary media family): the hash is tiny, the
     pairing is the pigeonhole band join, and the corpus's image bytes
-    are read exactly once. Real decode covers 8-bit PNG natively
-    (``media_codecs``) and anything PIL handles when installed; the
-    fake path hashes deterministic pseudo-pixels derived from the raw
-    bytes so plumbing tests run without decodable media.
+    are read exactly once. Decode covers every format
+    ``_decode_image_real`` handles (PNG, JPEG, GIF, lossless WebP, BMP,
+    ICO natively; more when PIL is installed).
 
     ``skip_undecodable`` maps NULL/undecodable content to a NULL hash
     instead of failing the task — a corpus-scale dedup job must not
@@ -265,17 +260,8 @@ def phash64(df: DataFrame, content_col: str = "content",
         import numpy as np
 
         def _one(raw: bytes) -> int:
-            if use_real_decoder:
-                pixels, _w, _h = _decode_image_real(raw)
-                lum = pixels.astype(np.float64).mean(axis=2)
-            else:
-                # deterministic fake bitmap from the bytes themselves —
-                # identical content -> identical hash, so the banding
-                # plumbing is exercised without a decodable format
-                fake = _fake_feature(raw, 72)
-                lum = (np.array(fake, dtype=np.float64)
-                       .reshape(8, 9) * 127.5 + 127.5)
-            return _dhash64(lum)
+            pixels, _w, _h = _decode_image_real(raw)
+            return _dhash64(pixels.astype(np.float64).mean(axis=2))
 
         for pdf in batches:
             vals: list[int | None] = []
@@ -300,7 +286,6 @@ def phash64(df: DataFrame, content_col: str = "content",
 def image_near_duplicates(df: DataFrame, content_col: str = "content",
                           id_col: str = "media_id", max_hamming: int = 3,
                           bands: int = 4,
-                          use_real_decoder: bool = False,
                           skip_undecodable: bool = False) -> DataFrame:
     """Image near-dup pairs: ``phash64`` codes into the simhash-style
     pigeonhole band join (``dedup.banded_hamming_pairs``). With
@@ -314,13 +299,11 @@ def image_near_duplicates(df: DataFrame, content_col: str = "content",
     return media_dedup_incremental(
         df, None, "image", content_col, id_col,
         max_hamming=max_hamming, bands=bands,
-        use_real_decoder=use_real_decoder,
         skip_undecodable=skip_undecodable)
 
 
 def audio_fingerprint64(df: DataFrame, content_col: str = "content",
                         id_col: str = "media_id",
-                        use_real_decoder: bool = False,
                         skip_undecodable: bool = False) -> DataFrame:
     """64-bit audio fingerprint (Haitsma-Kalker-style public method,
     collapsed to one band): decode -> mono -> 65 equal frames -> one
@@ -334,12 +317,10 @@ def audio_fingerprint64(df: DataFrame, content_col: str = "content",
     Real decode covers PCM WAV, FLAC, and FLAC-in-Ogg natively
     (``media_codecs.decode_audio``); anything else — MP3/AAC and
     Ogg Vorbis/Opus — raises ``DecoderNotAvailable`` (ffmpeg
-    territory).
-    The fake path derives deterministic pseudo-energies from the raw
-    bytes so plumbing tests run without decodable audio. Clips shorter
-    than 65 samples fingerprint their cycled frames (deterministic),
-    not an error. ``skip_undecodable`` maps NULL/undecodable content to
-    a NULL fingerprint instead of failing the task (see ``phash64``).
+    territory). Clips shorter than 65 samples fingerprint their cycled
+    frames (deterministic), not an error. ``skip_undecodable`` maps
+    NULL/undecodable content to a NULL fingerprint instead of failing
+    the task (see ``phash64``).
     Returns (id_col, afp long).
     """
     schema = f"{id_col} long, afp long"
@@ -350,27 +331,23 @@ def audio_fingerprint64(df: DataFrame, content_col: str = "content",
         from kiji_mapreduce_spark.pipeline import media_codecs
 
         def _one(raw: bytes) -> int:
-            if use_real_decoder:
-                if raw[:4] not in (b"RIFF", b"fLaC") \
-                        and not media_codecs.is_ogg_flac(raw):
-                    # Ogg Vorbis/Opus land here too: a VALID
-                    # ffmpeg-territory file is a missing-decoder
-                    # diagnosis, not the corrupt-bytes class
-                    raise DecoderNotAvailable(
-                        "MP3/AAC/Ogg-Vorbis/Opus audio requires "
-                        "ffmpeg/soundfile, not bundled; PCM WAV, "
-                        "FLAC and Ogg-FLAC decode natively")
-                samples, _rate, _w = media_codecs.decode_audio(raw)
-                mono = samples.astype(np.float64).mean(axis=1)
-                if mono.size < 65:
-                    mono = np.resize(mono, 65)
-                # 65 equal frames -> mean-square energy per frame
-                cut = (mono.size // 65) * 65
-                frames = mono[:cut].reshape(65, -1)
-                energy = (frames ** 2).mean(axis=1)
-            else:
-                energy = np.array(_fake_feature(raw, 65),
-                                  dtype=np.float64) ** 2
+            if raw[:4] not in (b"RIFF", b"fLaC") \
+                    and not media_codecs.is_ogg_flac(raw):
+                # Ogg Vorbis/Opus land here too: a VALID
+                # ffmpeg-territory file is a missing-decoder
+                # diagnosis, not the corrupt-bytes class
+                raise DecoderNotAvailable(
+                    "MP3/AAC/Ogg-Vorbis/Opus audio requires "
+                    "ffmpeg/soundfile, not bundled; PCM WAV, "
+                    "FLAC and Ogg-FLAC decode natively")
+            samples, _rate, _w = media_codecs.decode_audio(raw)
+            mono = samples.astype(np.float64).mean(axis=1)
+            if mono.size < 65:
+                mono = np.resize(mono, 65)
+            # 65 equal frames -> mean-square energy per frame
+            cut = (mono.size // 65) * 65
+            frames = mono[:cut].reshape(65, -1)
+            energy = (frames ** 2).mean(axis=1)
             bits = energy[1:] > energy[:-1]
             v = 0
             for i, bit in enumerate(bits):
@@ -399,7 +376,6 @@ def audio_fingerprint64(df: DataFrame, content_col: str = "content",
 def audio_near_duplicates(df: DataFrame, content_col: str = "content",
                           id_col: str = "media_id", max_hamming: int = 3,
                           bands: int = 4,
-                          use_real_decoder: bool = False,
                           skip_undecodable: bool = False) -> DataFrame:
     """Audio near-dup pairs: ``audio_fingerprint64`` codes into the
     pigeonhole band join; ``skip_undecodable`` drops undecodable rows
@@ -407,13 +383,11 @@ def audio_near_duplicates(df: DataFrame, content_col: str = "content",
     return media_dedup_incremental(
         df, None, "audio", content_col, id_col,
         max_hamming=max_hamming, bands=bands,
-        use_real_decoder=use_real_decoder,
         skip_undecodable=skip_undecodable)
 
 
 def video_frame_phash64(df: DataFrame, content_col: str = "content",
                         id_col: str = "media_id", every_n: int = 1,
-                        use_real_decoder: bool = False,
                         skip_undecodable: bool = False) -> DataFrame:
     """Per-frame perceptual hashes of a video column: sample every
     ``every_n``-th frame (always starting at frame 0) and dHash each —
@@ -423,10 +397,7 @@ def video_frame_phash64(df: DataFrame, content_col: str = "content",
 
     Real decode covers the Motion-PNG container natively
     (``media_codecs.decode_video`` — every frame a real PNG);
-    MP4/WebM raise ``DecoderNotAvailable`` (ffmpeg territory). The fake
-    path derives deterministic pseudo-frames from the raw bytes
-    (content length fixes the frame count, one 8x9 pseudo-bitmap per
-    frame) so plumbing tests run without decodable video.
+    MP4/WebM raise ``DecoderNotAvailable`` (ffmpeg territory).
     ``skip_undecodable`` drops undecodable clips (no rows) instead of
     failing the task — same reject discipline as ``phash64``.
     """
@@ -437,34 +408,11 @@ def video_frame_phash64(df: DataFrame, content_col: str = "content",
     def _hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from kiji_mapreduce_spark.pipeline import media_codecs
-
         def _frames(raw: bytes) -> list[tuple[int, int]]:
-            if use_real_decoder:
-                if raw[:4] != b"MPNG" \
-                        and raw[:6] not in media_codecs._GIF_MAGICS \
-                        and not media_codecs.is_webp(raw):
-                    raise DecoderNotAvailable(
-                        "MP4/WebM video requires ffmpeg, not bundled; "
-                        "Motion-PNG, animated GIF and animated "
-                        "lossless WebP decode natively")
-                frames, _micros = media_codecs.decode_video(raw)
-                out = []
-                for fno in range(0, len(frames), every_n):
-                    px = frames[fno]
-                    lum = px.astype(np.float64).mean(axis=2)
-                    out.append((fno, _dhash64(lum)))
-                return out
-            # deterministic fake: content length fixes the frame count,
-            # each frame an 8x9 pseudo-bitmap keyed on (bytes, frame)
-            n_frames = max(1, len(raw) // 256)
-            out = []
-            for fno in range(0, n_frames, every_n):
-                fake = _fake_feature(raw + fno.to_bytes(4, "big"), 72)
-                lum = (np.array(fake, dtype=np.float64)
-                       .reshape(8, 9) * 127.5 + 127.5)
-                out.append((fno, _dhash64(lum)))
-            return out
+            frames = _decode_clip(raw)
+            return [(fno, _dhash64(
+                        frames[fno].astype(np.float64).mean(axis=2)))
+                    for fno in range(0, len(frames), every_n)]
 
         for pdf in batches:
             ids: list[int] = []
@@ -493,7 +441,6 @@ def video_near_duplicates(df: DataFrame, content_col: str = "content",
                           id_col: str = "media_id", every_n: int = 1,
                           max_hamming: int = 3, bands: int = 4,
                           min_frames: int = 2,
-                          use_real_decoder: bool = False,
                           skip_undecodable: bool = False) -> DataFrame:
     """Video near-dup pairs: clips whose SAME-POSITION sampled frames
     near-match (dHash hamming <= ``max_hamming``) in at least
@@ -512,14 +459,12 @@ def video_near_duplicates(df: DataFrame, content_col: str = "content",
     return media_dedup_incremental(
         df, None, "video", content_col, id_col, every_n,
         max_hamming=max_hamming, bands=bands, min_frames=min_frames,
-        use_real_decoder=use_real_decoder,
         skip_undecodable=skip_undecodable)
 
 
 def media_codes(df: DataFrame, kind: str = "image",
                 content_col: str = "content", id_col: str = "media_id",
-                every_n: int = 1, use_real_decoder: bool = False,
-                skip_undecodable: bool = False):
+                every_n: int = 1, skip_undecodable: bool = False):
     """Kind dispatch for the perceptual-code family: returns
     ``(codes, code_col, key_cols)`` — image -> (id, phash), audio ->
     (id, afp), video -> (id, frame_no, phash) keyed on frame_no.
@@ -528,15 +473,15 @@ def media_codes(df: DataFrame, kind: str = "image",
     ``stream_media_dedup``, and the media-dedup CLI."""
     if kind == "image":
         codes, code_col, keys = phash64(
-            df, content_col, id_col, use_real_decoder,
+            df, content_col, id_col,
             skip_undecodable=skip_undecodable), "phash", ()
     elif kind == "audio":
         codes, code_col, keys = audio_fingerprint64(
-            df, content_col, id_col, use_real_decoder,
+            df, content_col, id_col,
             skip_undecodable=skip_undecodable), "afp", ()
     elif kind == "video":
         codes, code_col, keys = video_frame_phash64(
-            df, content_col, id_col, every_n, use_real_decoder,
+            df, content_col, id_col, every_n,
             skip_undecodable=skip_undecodable), "phash", ("frame_no",)
     else:
         raise ValueError(f"unknown media kind {kind!r}")
@@ -548,8 +493,7 @@ def media_dedup_incremental(
     kind: str = "image", content_col: str = "content",
     id_col: str = "media_id", every_n: int = 1,
     max_hamming: int = 3, bands: int = 4, min_frames: int = 2,
-    use_real_decoder: bool = False, skip_undecodable: bool = False,
-    return_codes: bool = False,
+    skip_undecodable: bool = False, return_codes: bool = False,
 ):
     """Dedup a NEW media batch against a persisted code ``index`` (plus
     within the batch) — ``dedup.minhash_dedup_incremental``'s
@@ -572,7 +516,7 @@ def media_dedup_incremental(
         raise ValueError(f"min_frames must be >= 1, got {min_frames}")
     codes, code_col, keys = media_codes(
         batch_df, kind, content_col, id_col, every_n,
-        use_real_decoder, skip_undecodable)
+        skip_undecodable=skip_undecodable)
     codes = codes.localCheckpoint(eager=True)
     pairs = dedup.banded_hamming_pairs_incremental(
         codes, index, code_col, id_col,
@@ -606,36 +550,25 @@ def read_code_index(spark, path: str):
 
 def resize_images(df: DataFrame, content_col: str = "content",
                   id_col: str = "media_id", width: int = 224,
-                  height: int = 224,
-                  use_real_decoder: bool = False) -> DataFrame:
+                  height: int = 224) -> DataFrame:
     """Resize: (id, resized binary, width, height).
 
-    ``use_real_decoder=True`` decodes PNG content with the native codec
-    (``media_codecs``), nearest-neighbor-resamples, and re-encodes PNG —
-    a real image pipeline with zero external dependencies. The fake path
-    produces a deterministic byte payload of the target 'pixel' size so
-    batch shapes and downstream schemas are exercised even for formats
-    the environment cannot decode."""
+    Decodes each image (``_decode_image_real``), nearest-neighbor-
+    resamples, and re-encodes PNG — a real image pipeline with zero
+    external dependencies."""
     out_schema = (f"{id_col} long, content binary, "
                   "width int, height int")
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
+        from kiji_mapreduce_spark.pipeline import media_codecs
+
         for pdf in batches:
             resized = []
             for c in pdf[content_col]:
-                raw = bytes(c) if c is not None else b""
-                if use_real_decoder:
-                    from kiji_mapreduce_spark.pipeline import media_codecs
-
-                    pixels, _w, _h = _decode_image_real(raw)
-                    out = media_codecs.resize_nearest(pixels, width, height)
-                    resized.append(media_codecs.encode_png(out))
-                else:
-                    # deterministic fake: cycle the source bytes to the
-                    # target 'pixel count' (stands in for decode+resize)
-                    reps = (target // max(len(raw), 1)) + 1
-                    resized.append((raw * reps)[:target])
+                pixels, _w, _h = _decode_image_real(
+                    bytes(c) if c is not None else b"")
+                out = media_codecs.resize_nearest(pixels, width, height)
+                resized.append(media_codecs.encode_png(out))
             yield pd.DataFrame({
                 id_col: pdf[id_col], "content": resized,
                 "width": width, "height": height,
@@ -810,72 +743,42 @@ def write_webdataset(df: DataFrame, out_dir: str,
 
 def sample_frames(df: DataFrame, content_col: str = "content",
                   id_col: str = "media_id", every_n: int = 10,
-                  frame_size: int = 256,
-                  use_real_decoder: bool = False,
                   skip_undecodable: bool = False) -> DataFrame:
     """Explode a video blob into sampled frame rows (media_id,
     frame_no, frame_bytes).
 
-    ``use_real_decoder=True`` parses the Motion-PNG container
-    (``media_codecs.decode_video``) and re-emits every ``every_n``-th
-    frame as standalone PNG bytes — real rows any image operator
-    (``phash64``, ``extract_features``, ``resize_images``) consumes
-    directly; MP4/WebM raise ``DecoderNotAvailable`` (ffmpeg
-    territory), or are dropped with ``skip_undecodable``. The default
-    fake path keeps the original plumbing stub: slice the raw bytes
-    into ``frame_size`` windows standing in for decoded frames (the
-    final window may be short — flooring dropped the tail bytes
-    entirely, r5 review)."""
-    if use_real_decoder:
-        if every_n < 1:
-            raise ValueError(f"every_n must be >= 1, got {every_n}")
-        schema = f"{id_col} long, frame_no int, frame_bytes binary"
+    Parses the clip container (``media_codecs.decode_video``: Motion-PNG,
+    animated GIF, animated lossless WebP) and re-emits every
+    ``every_n``-th frame as standalone PNG bytes — real rows any image
+    operator (``phash64``, ``extract_features``, ``resize_images``)
+    consumes directly; MP4/WebM raise ``DecoderNotAvailable`` (ffmpeg
+    territory), or are dropped with ``skip_undecodable``."""
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
+    schema = f"{id_col} long, frame_no int, frame_bytes binary"
 
-        def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from kiji_mapreduce_spark.pipeline import media_codecs
+    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from kiji_mapreduce_spark.pipeline import media_codecs
 
-            for pdf in batches:
-                ids: list[int] = []
-                fnos: list[int] = []
-                blobs: list[bytes] = []
-                for mid, c in zip(pdf[id_col], pdf[content_col]):
-                    raw = bytes(c) if c is not None else b""
-                    try:
-                        if raw[:4] != b"MPNG" \
-                                and raw[:6] not in \
-                                media_codecs._GIF_MAGICS \
-                                and not media_codecs.is_webp(raw):
-                            raise DecoderNotAvailable(
-                                "MP4/WebM video requires ffmpeg, not "
-                                "bundled; Motion-PNG, animated GIF "
-                                "and animated lossless WebP decode "
-                                "natively")
-                        frames, _micros = media_codecs.decode_video(raw)
-                    except Exception:
-                        if skip_undecodable:
-                            continue
-                        raise
-                    for fno in range(0, len(frames), every_n):
-                        ids.append(mid)
-                        fnos.append(fno)
-                        blobs.append(
-                            media_codecs.encode_png(frames[fno]))
-                yield pd.DataFrame({
-                    id_col: pd.array(ids, dtype="int64"),
-                    "frame_no": pd.array(fnos, dtype="int32"),
-                    "frame_bytes": blobs})
+        for pdf in batches:
+            ids: list[int] = []
+            fnos: list[int] = []
+            blobs: list[bytes] = []
+            for mid, c in zip(pdf[id_col], pdf[content_col]):
+                raw = bytes(c) if c is not None else b""
+                try:
+                    frames = _decode_clip(raw)
+                except Exception:
+                    if skip_undecodable:
+                        continue
+                    raise
+                for fno in range(0, len(frames), every_n):
+                    ids.append(mid)
+                    fnos.append(fno)
+                    blobs.append(media_codecs.encode_png(frames[fno]))
+            yield pd.DataFrame({
+                id_col: pd.array(ids, dtype="int64"),
+                "frame_no": pd.array(fnos, dtype="int32"),
+                "frame_bytes": blobs})
 
-        return df.select(id_col, content_col).mapInPandas(_explode, schema)
-    n_frames = F.greatest(
-        F.ceil(F.length(content_col) / F.lit(frame_size)).cast("int"),
-        F.lit(1))
-    idx = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return (
-        df.select(id_col, content_col, F.explode(idx).alias("frame_no"))
-        .select(
-            id_col, "frame_no",
-            F.substring(F.col(content_col),
-                        F.col("frame_no") * frame_size + 1, frame_size
-                        ).alias("frame_bytes"),
-        )
-    )
+    return df.select(id_col, content_col).mapInPandas(_explode, schema)

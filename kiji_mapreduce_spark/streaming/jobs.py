@@ -273,7 +273,6 @@ def stream_media_dedup(
     bands: int = 4,
     every_n: int = 1,
     min_frames: int = 2,
-    use_real_decoder: bool = False,
     skip_undecodable: bool = True,
     trigger_available_now: bool = True,
 ):
@@ -321,8 +320,8 @@ def stream_media_dedup(
         # without re-reading media bytes
         pairs, codes = multimodal.media_dedup_incremental(
             batch_df, index, kind, content_col, id_col, every_n,
-            max_hamming, bands, min_frames, use_real_decoder,
-            skip_undecodable, return_codes=True)
+            max_hamming=max_hamming, bands=bands, min_frames=min_frames,
+            skip_undecodable=skip_undecodable, return_codes=True)
         # batch_id-partitioned overwrites make foreachBatch's
         # at-least-once replay idempotent: a crash between these writes
         # and the checkpoint commit replays the batch into the SAME

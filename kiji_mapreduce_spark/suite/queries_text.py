@@ -423,68 +423,22 @@ def q_lm_bigram_quality(spark, sf_dir):
     return lm.bigram_lm_scores(docs, alpha=0.1, hash_fn="md5")
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing over real data: treat each document's UTF-8
-    bytes as an opaque media blob, attach typed metadata, extract a
-    deterministic fake embedding via the Arrow/mapInPandas path. Fully
-    oracle-checked since r4: the fake feature is sha256-derived and
-    DuckDB's sha256(VARCHAR) hashes the same UTF-8 bytes, so the oracle
-    recomputes f0/f1 exactly from hex substrings."""
-    from kiji_mapreduce_spark.pipeline import multimodal
-
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("content"))
-    with_meta = multimodal.attach_media_meta(media, media_type="text/blob")
-    feats = multimodal.extract_features(with_meta, dim=8)
-    return feats.select(
-        "media_id",
-        F.round(F.element_at("feature", 1), 6).alias("f0"),
-        F.round(F.element_at("feature", 2), 6).alias("f1"),
-        F.size("feature").alias("dim"))
-
-
-# the fake feature maps h = sha256(content || be32(0)) to floats via
-# uint32_be(h[4i:4i+4]) / 2^31 - 1 (multimodal._fake_feature); dim=8
-# needs only counter 0, so f0/f1 are the first two 4-byte windows
-SQL_MULTIMODAL_FEATURES = """
-WITH h AS (
-  SELECT doc_id AS media_id,
-         sha256(text || chr(0) || chr(0) || chr(0) || chr(0)) AS hx
-  FROM documents
-)
-SELECT media_id,
-       round(('0x' || substr(hx, 1, 8))::BIGINT / 2147483648.0 - 1.0, 6)
-         AS f0,
-       round(('0x' || substr(hx, 9, 8))::BIGINT / 2147483648.0 - 1.0, 6)
-         AS f1,
-       8 AS dim
-FROM h
-"""
-
-
-def q_image_near_duplicates(spark, sf_dir):
-    """Image perceptual-hash dedup, end-to-end through the REAL codec
-    path: each document synthesizes a deterministic 8x9 grayscale
-    bitmap (pixel i = md5-60bit(token[i mod n]) % 256 — duplicate texts
-    yield identical images, near-dup texts yield near-identical ones),
-    the bitmap round-trips a real PNG encode (``media_codecs``), and
-    ``multimodal.image_near_duplicates`` decodes, dHashes, and
-    band-joins the codes. The oracle recomputes the dHash from the same
-    md5 pixel arithmetic — the lossless PNG round-trip is exactly what
-    the hash-match proves."""
+def _doc_png_images(spark, sf_dir):
+    """(media_id, content) with content a real 8x9 grayscale PNG whose
+    pixel i = md5-60bit(token[i mod n]) % 256 — duplicate texts yield
+    identical images, near-dup texts near-identical ones. Shared by the
+    image queries, whose oracles recompute the same pixel arithmetic
+    (``oracles.doc_pixels_cte``); the lossless PNG round-trip is what
+    their hash match proves."""
     import numpy as np
     import pandas as pd
 
-    from kiji_mapreduce_spark.pipeline import multimodal
-
-    # pixel i = md5-60bit(token[i mod n]) % 256. The shared synthesizer
-    # hashes the token array ONCE and cycles it with array_repeat+slice:
-    # higher-order lambdas run interpreted (no codegen subexpression
-    # elimination), so an element_at(toks, i mod n) form re-tokenizes
-    # the text per PIXEL (~144 regexp splits/row — measured 9.5s for 5k
-    # rows at sf0.1; this form is ~20x faster and value-identical).
+    # The shared synthesizer hashes the token array ONCE and cycles it
+    # with array_repeat+slice: higher-order lambdas run interpreted (no
+    # codegen subexpression elimination), so an element_at(toks, i mod
+    # n) form re-tokenizes the text per PIXEL (~144 regexp splits/row —
+    # measured 9.5s for 5k rows at sf0.1; this form is ~20x faster and
+    # value-identical).
     pixels = _doc_pixel_stream(
         common._t_widened(spark, sf_dir, "documents", "doc_id"), 72)
 
@@ -499,9 +453,42 @@ def q_image_near_duplicates(spark, sf_dir):
             yield pd.DataFrame({"media_id": pdf["media_id"],
                                 "content": content})
 
-    imgs = pixels.mapInPandas(_encode, "media_id long, content binary")
+    return pixels.mapInPandas(_encode, "media_id long, content binary")
+
+
+def q_multimodal_features(spark, sf_dir):
+    """Multimodal feature extraction through the real codec: each
+    document's synthetic PNG (``_doc_png_images``) gets typed metadata,
+    then ``multimodal.extract_features`` decodes it in the
+    Arrow/mapInPandas path and emits an 8-bin luminance histogram.
+    f0/f1 are the fractions of the 72 pixels below 32 and in [32, 64),
+    which the oracle recounts from the same md5 pixel arithmetic."""
+    from kiji_mapreduce_spark.pipeline import multimodal
+
+    with_meta = multimodal.attach_media_meta(
+        _doc_png_images(spark, sf_dir), fmt="png")
+    feats = multimodal.extract_features(with_meta, dim=8)
+    return feats.select(
+        "media_id",
+        F.round(F.element_at("feature", 1), 6).alias("f0"),
+        F.round(F.element_at("feature", 2), 6).alias("f1"),
+        F.size("feature").alias("dim"))
+
+
+SQL_MULTIMODAL_FEATURES = oracles.multimodal_features_sql()
+
+
+def q_image_near_duplicates(spark, sf_dir):
+    """Image perceptual-hash dedup, end-to-end through the REAL codec
+    path: each document's synthetic PNG (``_doc_png_images``) is
+    decoded, dHashed, and band-joined by
+    ``multimodal.image_near_duplicates``. The oracle recomputes the
+    dHash from the same md5 pixel arithmetic — the lossless PNG
+    round-trip is exactly what the hash-match proves."""
+    from kiji_mapreduce_spark.pipeline import multimodal
+
     out = multimodal.image_near_duplicates(
-        imgs, max_hamming=3, bands=4, use_real_decoder=True)
+        _doc_png_images(spark, sf_dir), max_hamming=3, bands=4)
     return out.select("id_a", "id_b", "hamming")
 
 
@@ -578,8 +565,7 @@ def q_video_near_duplicates(spark, sf_dir):
 
     clips = pixels.mapInPandas(_encode, "media_id long, content binary")
     out = multimodal.video_near_duplicates(
-        clips, every_n=2, max_hamming=2, bands=4, min_frames=1,
-        use_real_decoder=True)
+        clips, every_n=2, max_hamming=2, bands=4, min_frames=1)
     return out.select("id_a", "id_b", "n_matching")
 
 
@@ -622,7 +608,7 @@ def q_audio_near_duplicates(spark, sf_dir):
 
     clips = pcm.mapInPandas(_encode, "media_id long, content binary")
     out = multimodal.audio_near_duplicates(
-        clips, max_hamming=2, bands=4, use_real_decoder=True)
+        clips, max_hamming=2, bands=4)
     return out.select("id_a", "id_b", "hamming")
 
 

@@ -1,18 +1,12 @@
-"""Tests for the gated libbrotlidec binding (io.brotli_codec).
-
-Everything that DECODES is skipped when no system libbrotlidec loads
-(the binding's whole design: capability-probed, loud reject-and-count
-when absent — the availability-off behavior is itself pinned here via
-monkeypatching the probe).
-"""
+"""Tests for brotli decode through pyarrow's bundled library
+(io.brotli_codec)."""
 
 import base64
 
+import pyarrow as pa
 import pytest
 
 from kiji_mapreduce_spark.io import brotli_codec
-
-_HAVE = brotli_codec.available()
 
 #: reference-encoded (libbrotlienc q9) fixture for the page below
 PAGE = b"<p>a brotli page with enough words to keep around</p>"
@@ -21,7 +15,6 @@ PAGE_BR = base64.b64decode(
     "5R3eKU0O")
 
 
-@pytest.mark.skipif(not _HAVE, reason="no system libbrotlidec")
 def test_decode_fixture_and_error_surface():
     assert brotli_codec.decompress(PAGE_BR) == PAGE
     for bad in (PAGE_BR[:8], PAGE_BR + b"x", b"\xff\xff\xffgarbage",
@@ -32,8 +25,8 @@ def test_decode_fixture_and_error_surface():
         brotli_codec.decompress(PAGE_BR, max_output=10)
 
 
-@pytest.mark.skipif(not _HAVE, reason="no system libbrotlidec")
 def test_round_trips_via_system_encoder():
+    """Round-trips through pyarrow's brotli encoder at q1-11."""
     import os
     import random
 
@@ -48,15 +41,14 @@ def test_round_trips_via_system_encoder():
         else:
             data = bytes(random.randrange(7) for _ in range(n))
         for q in (1, 5, 9, 11):
-            enc = brotli_codec._encode_for_tests(data, quality=q)
+            enc = pa.Codec("brotli", compression_level=q).compress(
+                data, asbytes=True)
             assert brotli_codec.decompress(enc) == data
 
 
-@pytest.mark.skipif(not _HAVE, reason="no system libbrotlidec")
 def test_http_br_body_decodes(spark, tmp_path):
-    """content-encoding: br pages become documents end-to-end (the
-    r10/r11 'missing #1' coverage loss, closed where a system
-    libbrotlidec exists); corrupt br bodies still reject-and-count."""
+    """content-encoding: br pages become documents end-to-end;
+    corrupt br bodies still reject-and-count."""
     from kiji_mapreduce_spark.io.inputs import (_decode_http_payload,
                                                 read_warc_records)
     from kiji_mapreduce_spark.pipeline.crawl import (crawl_documents,
@@ -85,33 +77,3 @@ def test_http_br_body_decodes(spark, tmp_path):
            for r in encoding_rejects(records).collect()}
     assert rej == {"br": 1}
 
-
-def test_unavailable_library_behavior(monkeypatch, spark):
-    """With NO libbrotlidec (probe forced off), br bodies pass through
-    the payload decoder untouched and the crawl gate rejects-and-counts
-    them — the exact pre-r12 contract. The probe is patched on the
-    DRIVER, which is where both decision points live: the payload
-    decoder here is called directly, and the gate's inflatable-codings
-    list is baked into the plan at build time (executors never
-    re-probe for it)."""
-    import kiji_mapreduce_spark.io.brotli_codec as bc
-    from kiji_mapreduce_spark.io.inputs import _decode_http_payload
-    from kiji_mapreduce_spark.pipeline.crawl import (crawl_documents,
-                                                     encoding_rejects)
-
-    monkeypatch.setattr(bc, "available", lambda: False)
-    body = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-            b"Content-Encoding: br\r\n\r\n" + PAGE_BR)
-    assert _decode_http_payload(body) == body
-
-    # records-shaped rows built directly (bypassing the WARC parser,
-    # whose executor-side workers would re-probe the REAL library):
-    # the still-encoded gate must reject the undecoded body
-    records = spark.createDataFrame(
-        [("a.warc", 0, "response", "http://br.example.com/x",
-          "2026-01-01T00:00:00Z", "<id>", len(body), body)],
-        "path string, record_no long, warc_type string, "
-        "target_uri string, warc_date string, record_id string, "
-        "content_length long, content binary")
-    assert crawl_documents(records, spark).count() == 0
-    assert encoding_rejects(records).count() == 1

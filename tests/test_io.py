@@ -643,6 +643,7 @@ def test_warc_http_payload_decoding(spark, tmp_path):
     import zlib
 
     from kiji_mapreduce_spark.io.inputs import (_decode_http_payload,
+                                                read_warc_raw,
                                                 read_warc_records)
     from kiji_mapreduce_spark.pipeline.text import http_html_text
 
@@ -695,10 +696,10 @@ def test_warc_http_payload_decoding(spark, tmp_path):
         read_warc_records(spark, [str(d)])).collect()}
     assert rows["http://x/gz"] == rows["http://x/plain"] \
         == rows["http://x/chunked"] == "compressed page text here"
-    # decode_http=False preserves the captured bytes verbatim
-    raw = {r.target_uri: bytes(r.content) for r in read_warc_records(
-        spark, [str(d)], decode_http=False).collect()}
-    assert raw["http://x/gz"] == gz
+    # read_warc_raw preserves the captured bytes verbatim
+    raw = {r.target_uri: bytes(r.record)
+           for r in read_warc_raw(spark, [str(d)]).collect()}
+    assert raw["http://x/gz"].endswith(gz)
 
 
 def test_warc_http_payload_decoding_adversarial():
@@ -1202,7 +1203,7 @@ def test_warc_records_from_ranges_byte_identical(spark, tmp_path):
     # whole-file parse = the ground truth
     whole = {(r.path.split("/")[-1], r.record_no): r
              for r in read_warc_records(
-                 spark, [str(d)], decode_http=False).collect()}
+                 spark, [str(d)]).collect()}
 
     # plain-file ranges: raw record offsets
     plain_ranges = []
@@ -1216,8 +1217,7 @@ def test_warc_records_from_ranges_byte_identical(spark, tmp_path):
     ranges = spark.createDataFrame(
         rows, "filename string, offset long, length long")
     got = warc_records_from_ranges(
-        ranges, base=str(tmp_path / "warcs"),
-        decode_http=False).collect()
+        ranges, base=str(tmp_path / "warcs")).collect()
     assert len(got) == 6
     for r in got:
         fname = r.path.split("/")[-1]
@@ -1467,10 +1467,8 @@ def test_warc_range_fetch_striping(spark, tmp_path):
         [("s.warc.gz", o, ln) for o, ln in ranges],
         "filename string, offset long, length long")
     wide = warc_records_from_ranges(df, base=str(tmp_path),
-                                    decode_http=False,
                                     stripe_bytes=64)
-    one = warc_records_from_ranges(df, base=str(tmp_path),
-                                   decode_http=False)
+    one = warc_records_from_ranges(df, base=str(tmp_path))
     key = lambda r: (r.offset, r.target_uri, bytes(r.content))
     assert sorted(map(key, wide.collect())) == \
         sorted(map(key, one.collect()))
@@ -1493,7 +1491,7 @@ def test_warc_range_fetch_uri_scheme_via_pyarrow(spark, tmp_path):
     df = spark.createDataFrame(
         [(f"file://{f}", ranges[0][0], ranges[0][1])],
         "filename string, offset long, length long")
-    got = warc_records_from_ranges(df, decode_http=False).collect()
+    got = warc_records_from_ranges(df).collect()
     assert len(got) == 1
     assert got[0].target_uri == "http://u.example.com/x"
     assert bytes(got[0].content) == page
@@ -1546,7 +1544,7 @@ def test_warc_member_index_and_cdx_roundtrip(spark, tmp_path, capsys):
     # digest is over the record payload
     whole = {(r.path.split("/")[-1], r.target_uri): r
              for r in read_warc_records(
-                 spark, [str(warcs)], decode_http=False).collect()}
+                 spark, [str(warcs)]).collect()}
     for r in idx:
         w = whole[(r.path.split("/")[-1], r.target_uri)]
         assert r.digest == hashlib.md5(bytes(w.content)).hexdigest()
@@ -1562,8 +1560,7 @@ def test_warc_member_index_and_cdx_roundtrip(spark, tmp_path, capsys):
     assert all(r.ts == "20240101000000" for r in rows)
     fetched = {(r.path.split("/")[-1], r.target_uri): r
                for r in warc_records_from_ranges(
-                   parsed, base=str(warcs),
-                   decode_http=False).collect()}
+                   parsed, base=str(warcs)).collect()}
     assert len(fetched) == 6
     for k, w in whole.items():
         assert bytes(fetched[k].content) == bytes(w.content)
@@ -1690,11 +1687,10 @@ def test_warc_member_index_zst_roundtrip_byte_identity(spark,
     parsed = read_cdx(spark, [f"{tmp_path}/cdx"])
     whole = {r.target_uri: r
              for r in read_warc_records(
-                 spark, [str(warcs)], decode_http=False).collect()}
+                 spark, [str(warcs)]).collect()}
     fetched = {r.target_uri: r
                for r in warc_records_from_ranges(
-                   parsed, base=str(warcs),
-                   decode_http=False).collect()}
+                   parsed, base=str(warcs)).collect()}
     assert len(fetched) == len(whole) == 3
     for uri, w in whole.items():
         assert bytes(fetched[uri].content) == bytes(w.content)
@@ -2129,7 +2125,7 @@ def test_write_warc_round_trip_all_compressions(spark, tmp_path):
         got = {(r.warc_type, r.target_uri, r.warc_date, r.record_id,
                 bytes(r.content))
                for r in read_warc_records(
-                   spark, [str(out)], decode_http=False).collect()}
+                   spark, [str(out)]).collect()}
         assert got == want, comp
         # deterministic replay: identical bytes file-for-file
         before = {m["path"]: open(m["path"], "rb").read()
@@ -2169,12 +2165,10 @@ def test_write_warc_zst_closes_index_first_loop(spark, tmp_path):
     one = warc_records_from_ranges(
         spark.createDataFrame(
             [(target.path, target.offset, target.length)],
-            "filename string, offset long, length long"),
-        decode_http=False).collect()
+            "filename string, offset long, length long")).collect()
     assert len(one) == 1
     whole = {r.target_uri: bytes(r.content)
-             for r in read_warc_records(spark, [str(out)],
-                                        decode_http=False).collect()}
+             for r in read_warc_records(spark, [str(out)]).collect()}
     assert bytes(one[0].content) == whole["http://z.example.com/3"]
     # the pointed range is one checksummed frame that decodes with its
     # content checksum verified
@@ -2245,12 +2239,10 @@ def test_cli_warc_pack_reshard_and_index(spark, tmp_path, capsys):
     assert stats["n_records"] == 5 and stats["n_shards"] <= 2
 
     before = {r.target_uri: bytes(r.content)
-              for r in read_warc_records(spark, [str(src)],
-                                         decode_http=False).collect()}
+              for r in read_warc_records(spark, [str(src)]).collect()}
     after = {r.target_uri: bytes(r.content)
              for r in read_warc_records(
-                 spark, [f"{tmp_path}/packed"],
-                 decode_http=False).collect()}
+                 spark, [f"{tmp_path}/packed"]).collect()}
     assert after == before
 
     # raw byte identity: the FULL record bytes — every header
@@ -2303,7 +2295,7 @@ def test_write_warc_hostile_headers_and_big_bodies(spark, tmp_path):
         write_warc(df, str(out), compression=comp, n_shards=1)
         got = {r.record_id: r
                for r in read_warc_records(
-                   spark, [str(out)], decode_http=False).collect()}
+                   spark, [str(out)]).collect()}
         assert len(got) == 3, comp  # injection did NOT split records
         assert got["<urn:uuid:inj>"].target_uri == \
             "http://evil.example.com/%0D%0AWARC-Type: fake"
@@ -2396,7 +2388,6 @@ def test_warc_pack_keep_ids_survivor_loop(spark, tmp_path, capsys):
     stats = _json.loads(
         capsys.readouterr().out.strip().splitlines()[-1])
     assert stats["n_records"] == 2
-    kept = read_warc_records(spark, [f"{tmp_path}/kept"],
-                             decode_http=False).collect()
+    kept = read_warc_records(spark, [f"{tmp_path}/kept"]).collect()
     assert sorted(r.target_uri for r in kept) == [
         "http://s.example.com/1", "http://s.example.com/4"]

@@ -111,13 +111,13 @@ def test_wav_roundtrip():
 
 
 def test_extract_features_real_png(spark):
-    """use_real_decoder=True over real PNG bytes: the luminance histogram
+    """extract_features over real PNG bytes: the luminance histogram
     sums to 1 and shifts with image content."""
     dark = mc.encode_png(np.zeros((8, 8, 3), dtype=np.uint8))
     light = mc.encode_png(np.full((8, 8, 3), 250, dtype=np.uint8))
     media = spark.createDataFrame(
         [(1, dark), (2, light)], "media_id long, content binary")
-    out = multimodal.extract_features(media, dim=4, use_real_decoder=True)
+    out = multimodal.extract_features(media, dim=4)
     rows = {r.media_id: r.feature for r in out.collect()}
     assert rows[1][0] == 1.0 and rows[1][3] == 0.0   # all-dark -> bin 0
     assert rows[2][3] == 1.0 and rows[2][0] == 0.0   # all-light -> bin 3
@@ -129,7 +129,7 @@ def test_resize_images_real_png(spark):
     media = spark.createDataFrame(
         [(1, mc.encode_png(px))], "media_id long, content binary")
     out = multimodal.resize_images(
-        media, width=6, height=4, use_real_decoder=True)
+        media, width=6, height=4)
     row = out.first()
     assert (row.width, row.height) == (6, 4)
     back, w, h, c = mc.decode_png(bytes(row.content))
@@ -156,49 +156,56 @@ def test_extract_audio_features(spark):
     assert rows[3].n_frames == 1600
 
 
+def _png_and_one_pixel_corruption():
+    """(base, corrupt, distinct) PNG bytes: ``corrupt`` is ``base`` with
+    one pixel flipped AT a nearest-neighbor sample point (row 4, col 5
+    is dHash grid cell (1, 1) for 32x48 -> 8x9) hard enough to invert
+    its luminance ordering vs both horizontal neighbors (verified:
+    flips exactly 2 of the 64 comparison bits); ``distinct`` is a
+    structurally different image."""
+    rng = np.random.RandomState(7)
+    base = rng.randint(0, 256, size=(32, 48, 3)).astype(np.uint8)
+    corrupt = base.copy()
+    corrupt[4, 5] = 0 if base[4, 5].mean() >= 128 else 255
+    return (mc.encode_png(base), mc.encode_png(corrupt),
+            mc.encode_png(_gradient(32, 48, 3)))
+
+
 def test_phash64_dedup_fixture_images(spark):
     """Identical images pair at hamming 0, a one-pixel corruption stays
     within the banding guarantee (hamming <= max_hamming < bands), and a
     structurally distinct image pairs with nothing."""
-    rng = np.random.RandomState(7)
-    base = rng.randint(0, 256, size=(32, 48, 3)).astype(np.uint8)
-    corrupt = base.copy()
-    # flip one pixel AT a nearest-neighbor sample point (row 4, col 5 is
-    # dHash grid cell (1, 1) for 32x48 -> 8x9) hard enough to invert its
-    # luminance ordering vs both horizontal neighbors (verified: flips
-    # exactly 2 of the 64 comparison bits)
-    corrupt[4, 5] = 0 if base[4, 5].mean() >= 128 else 255
-    distinct = _gradient(32, 48, 3)
+    base, corrupt, distinct = _png_and_one_pixel_corruption()
     media = spark.createDataFrame(
-        [(1, mc.encode_png(base)), (2, mc.encode_png(base)),
-         (3, mc.encode_png(corrupt)), (4, mc.encode_png(distinct))],
+        [(1, base), (2, base), (3, corrupt), (4, distinct)],
         "media_id long, content binary")
     codes = {r.media_id: r.phash for r in multimodal.phash64(
-        media, use_real_decoder=True).collect()}
+        media).collect()}
     assert codes[1] == codes[2]
     assert codes[3] != codes[4]
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in multimodal.image_near_duplicates(
-                 media, max_hamming=3, bands=4,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4).collect()}
     assert pairs[(1, 2)] == 0
     # one corrupted pixel moves at most a couple of dHash comparisons
     assert (1, 3) in pairs and 0 < pairs[(1, 3)] <= 3
     assert not any(4 in p for p in pairs)
 
 
-def test_phash64_fake_path_deterministic(spark):
-    """Without a decodable format the fake path still yields stable
-    64-bit codes keyed on content bytes (plumbing for stubbed formats)."""
+def test_phash64_decodes_by_default(spark):
+    """Called with nothing but the DataFrame, ``phash64`` and
+    ``image_near_duplicates`` hash decoded pixels: a PNG pairs with its
+    one-pixel-corrupted copy, whose bytes differ throughout (a hash of
+    the raw bytes would pair only byte-identical blobs)."""
+    base, corrupt, _ = _png_and_one_pixel_corruption()
     media = spark.createDataFrame(
-        [(1, b"blob-a"), (2, b"blob-a"), (3, b"blob-b")],
-        "media_id long, content binary")
+        [(1, base), (2, corrupt)], "media_id long, content binary")
     codes = {r.media_id: r.phash
              for r in multimodal.phash64(media).collect()}
-    again = {r.media_id: r.phash
-             for r in multimodal.phash64(media).collect()}
-    assert codes == again
-    assert codes[1] == codes[2] != codes[3]
+    assert 0 < bin((codes[1] ^ codes[2]) & ((1 << 64) - 1)).count("1") \
+        <= 3
+    pairs = multimodal.image_near_duplicates(media).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
 
 
 def test_audio_fingerprint_dedup(spark):
@@ -219,13 +226,12 @@ def test_audio_fingerprint_dedup(spark):
          (5, mc.encode_wav(other, 16000))],
         "media_id long, content binary")
     codes = {r.media_id: r.afp for r in multimodal.audio_fingerprint64(
-        media, use_real_decoder=True).collect()}
+        media).collect()}
     assert codes[1] == codes[2] == codes[3]  # identity + gain invariance
     assert codes[5] != codes[1]
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in multimodal.audio_near_duplicates(
-                 media, max_hamming=3, bands=4,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4).collect()}
     assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 0
     assert (1, 4) in pairs and pairs[(1, 4)] <= 3
     assert not any(5 in p for p in pairs)
@@ -243,14 +249,14 @@ def test_phash64_skip_undecodable_and_band_guard(spark):
         [(1, good), (2, good), (3, b"not a png"), (4, None)],
         "media_id long, content binary")
     codes = {r.media_id: r.phash for r in multimodal.phash64(
-        media, use_real_decoder=True, skip_undecodable=True).collect()}
+        media, skip_undecodable=True).collect()}
     assert codes[1] == codes[2] is not None
     assert codes[3] is None and codes[4] is None
     pairs = multimodal.image_near_duplicates(
-        media, use_real_decoder=True, skip_undecodable=True).collect()
+        media, skip_undecodable=True).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
     with pytest.raises(Exception):
-        multimodal.phash64(media, use_real_decoder=True).collect()
+        multimodal.phash64(media).collect()
     with pytest.raises(ValueError, match="pigeonhole"):
         dedup.banded_hamming_pairs(
             spark.range(1).select(F.col("id"), F.lit(0).alias("code")),
@@ -308,51 +314,40 @@ def test_video_near_duplicates_frame_aligned(spark):
         "media_id long, content binary")
     hashes = {(r.media_id, r.frame_no): r.phash
               for r in multimodal.video_frame_phash64(
-                  media, use_real_decoder=True).collect()}
+                  media).collect()}
     assert all(hashes[(1, f)] == hashes[(2, f)] for f in range(4))
     assert hashes[(4, 0)] == hashes[(1, 1)]  # rotation, not re-hash
     pairs = {(r.id_a, r.id_b): r.n_matching
              for r in multimodal.video_near_duplicates(
-                 media, every_n=1, max_hamming=2, bands=4, min_frames=3,
-                 use_real_decoder=True).collect()}
+                 media, every_n=1, max_hamming=2, bands=4,
+                 min_frames=3).collect()}
     assert pairs[(1, 2)] == 4
     assert (1, 3) in pairs and pairs[(1, 3)] >= 3
     assert not any(4 in p or 5 in p for p in pairs)
     # every_n sampling: only frames 0 and 2 are hashed
     sampled = multimodal.video_frame_phash64(
-        media, every_n=2, use_real_decoder=True).collect()
+        media, every_n=2).collect()
     assert {r.frame_no for r in sampled} == {0, 2}
 
 
 def test_video_fake_path_and_skip_undecodable(spark):
-    """The fake path yields stable per-frame codes keyed on (bytes,
-    frame) without decodable video; skip_undecodable drops undecodable
-    clips entirely instead of failing; the real decoder raises loudly
-    for non-Motion-PNG formats."""
-    media = spark.createDataFrame(
-        [(1, b"x" * 600), (2, b"x" * 600), (3, b"y" * 600)],
-        "media_id long, content binary")
-    codes = {(r.media_id, r.frame_no): r.phash
-             for r in multimodal.video_frame_phash64(media).collect()}
-    again = {(r.media_id, r.frame_no): r.phash
-             for r in multimodal.video_frame_phash64(media).collect()}
-    assert codes == again
-    assert {f for (m, f) in codes if m == 1} == {0, 1}  # 600 // 256
-    assert codes[(1, 0)] == codes[(2, 0)] != codes[(3, 0)]
+    """skip_undecodable drops undecodable clips entirely instead of
+    failing; without it the decoder raises loudly for
+    non-Motion-PNG formats; bad sampling parameters are usage errors."""
     good = mc.encode_video([_gradient(8, 9, 1).squeeze()])
     mixed = spark.createDataFrame(
         [(1, good), (2, good), (3, b"mp4?" * 100), (4, None)],
         "media_id long, content binary")
     rows = multimodal.video_frame_phash64(
-        mixed, use_real_decoder=True, skip_undecodable=True).collect()
+        mixed, skip_undecodable=True).collect()
     assert {r.media_id for r in rows} == {1, 2}
     pairs = multimodal.video_near_duplicates(
-        mixed, min_frames=1, use_real_decoder=True,
+        mixed, min_frames=1,
         skip_undecodable=True).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
     with pytest.raises(Exception, match="ffmpeg|Motion-PNG"):
         multimodal.video_frame_phash64(
-            mixed, use_real_decoder=True).collect()
+            mixed).collect()
     with pytest.raises(ValueError, match="every_n"):
         multimodal.video_frame_phash64(mixed, every_n=0)
     with pytest.raises(ValueError, match="min_frames"):
@@ -457,9 +452,9 @@ def test_image_and_video_frame_hash_identically(spark):
     media_vid = spark.createDataFrame(
         [(1, mc.encode_video([px]))], "media_id long, content binary")
     img_code = multimodal.phash64(
-        media_img, use_real_decoder=True).first().phash
+        media_img).first().phash
     vid_code = multimodal.video_frame_phash64(
-        media_vid, use_real_decoder=True).first().phash
+        media_vid).first().phash
     assert img_code == vid_code
 
 
@@ -508,8 +503,7 @@ def test_video_near_duplicates_mixed_lengths(spark):
         [(1, mc.encode_video(fr)), (2, mc.encode_video(fr[:2]))],
         "media_id long, content binary")
     pairs = multimodal.video_near_duplicates(
-        media, every_n=1, max_hamming=2, bands=4, min_frames=2,
-        use_real_decoder=True).collect()
+        media, every_n=1, max_hamming=2, bands=4, min_frames=2).collect()
     assert [(r.id_a, r.id_b, r.n_matching) for r in pairs] == [(1, 2, 2)]
 
 
@@ -524,7 +518,7 @@ def test_sample_frames_real_decoder_feeds_image_ops(spark):
         [(1, mc.encode_video(fr)), (2, b"mp4?" * 100)],
         "media_id long, content binary")
     rows = multimodal.sample_frames(
-        media, every_n=2, use_real_decoder=True,
+        media, every_n=2,
         skip_undecodable=True).collect()
     assert [(r.media_id, r.frame_no) for r in rows] == \
         [(1, 0), (1, 2), (1, 4)]
@@ -532,15 +526,15 @@ def test_sample_frames_real_decoder_feeds_image_ops(spark):
         [(r.frame_no, bytes(r.frame_bytes)) for r in rows],
         "media_id long, content binary")
     frame_codes = {r.media_id: r.phash for r in multimodal.phash64(
-        frame_imgs, use_real_decoder=True).collect()}
+        frame_imgs).collect()}
     still = spark.createDataFrame(
         [(0, mc.encode_png(fr[0]))], "media_id long, content binary")
     still_code = multimodal.phash64(
-        still, use_real_decoder=True).first().phash
+        still).first().phash
     assert frame_codes[0] == still_code
     with pytest.raises(Exception, match="ffmpeg"):
         multimodal.sample_frames(
-            media, every_n=2, use_real_decoder=True).collect()
+            media, every_n=2).collect()
 
 
 # ---- JPEG (r7 verdict ask #4: real-format image decode) ----
@@ -672,8 +666,7 @@ def test_jpeg_progressive_pairs_with_baseline_twin(spark):
         "media_id long, content binary")
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in multimodal.image_near_duplicates(
-                 media, max_hamming=3, bands=4,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -691,9 +684,9 @@ def test_jpeg_phash_parity_with_png():
 
 
 def test_jpeg_image_near_duplicates_mixed_formats(spark):
-    """image_near_duplicates over a MIXED PNG/JPEG corpus without
-    --fake-decoder: the JPEG re-encode of a PNG image pairs with it at
-    hamming 0; a distinct image pairs with nothing."""
+    """image_near_duplicates over a MIXED PNG/JPEG corpus: the JPEG
+    re-encode of a PNG image pairs with it at hamming 0; a distinct
+    image pairs with nothing."""
     grad = _gradient(32, 48, 3)
     other = 255 - _gradient(32, 48, 3)[:, ::-1]
     media = spark.createDataFrame(
@@ -702,8 +695,7 @@ def test_jpeg_image_near_duplicates_mixed_formats(spark):
         "media_id long, content binary")
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in multimodal.image_near_duplicates(
-                 media, max_hamming=3, bands=4,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -858,8 +850,7 @@ def test_crawl_media_extraction(spark, tmp_path):
 
     # feeds the dedup stack directly (default media_id/content columns)
     pairs = multimodal.media_dedup_incremental(
-        media.filter("kind = 'image'"), None, "image",
-        use_real_decoder=True).collect()
+        media.filter("kind = 'image'"), None, "image").collect()
     dup = {rows["http://a.site.com/logo.png"].media_id,
            rows["http://b.other.org/copy.png"].media_id}
     assert any({p.id_a, p.id_b} >= dup for p in pairs)
@@ -1028,7 +1019,7 @@ def test_gif_image_dedup_cross_format(spark):
          (3, mc.encode_gif([other]))],
         "media_id long, content binary")
     pairs = multimodal.image_near_duplicates(
-        df, use_real_decoder=True).collect()
+        df).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
 
 
@@ -1052,7 +1043,7 @@ def test_gif_video_dedup_cross_container(spark):
          (3, mc.encode_gif(distinct))],
         "media_id long, content binary")
     pairs = multimodal.video_near_duplicates(
-        df, use_real_decoder=True, min_frames=3).collect()
+        df, min_frames=3).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
     assert pairs[0].n_matching == 3
 
@@ -1141,7 +1132,7 @@ def test_sample_frames_animated_gif(spark):
     media = spark.createDataFrame(
         [(9, mc.encode_gif(frames))], "media_id long, content binary")
     rows = multimodal.sample_frames(
-        media, every_n=2, use_real_decoder=True).collect()
+        media, every_n=2).collect()
     assert [(r.media_id, r.frame_no) for r in rows] == [(9, 0), (9, 2)]
     got2, _, _, _ = mc.decode_png(bytes(rows[1].frame_bytes))
     assert (got2 == frames[2]).all()
@@ -1418,7 +1409,7 @@ def test_bomb_blobs_route_through_skip_undecodable(spark):
         [(1, mc.encode_png(px)), (2, bytes(jpeg)), (3, bytes(gif))],
         "media_id long, content binary")
     rows = mm.phash64(
-        media, use_real_decoder=True, skip_undecodable=True).collect()
+        media, skip_undecodable=True).collect()
     by_id = {r["media_id"]: r["phash"] for r in rows}
     assert by_id[1] is not None
     assert by_id[2] is None and by_id[3] is None
@@ -1624,8 +1615,7 @@ def test_webp_image_near_duplicates_cross_format(spark):
         "media_id long, content binary")
     pairs = {(r.id_a, r.id_b): r.hamming
              for r in multimodal.image_near_duplicates(
-                 media, max_hamming=3, bands=4,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -1952,11 +1942,11 @@ def test_flac_audio_dedup_cross_format(spark):
          (3, mc.encode_flac(other, 16000, mode="verbatim"))],
         "media_id long, content binary")
     codes = {r.media_id: r.afp for r in multimodal.audio_fingerprint64(
-        media, use_real_decoder=True).collect()}
+        media).collect()}
     assert codes[1] == codes[2]
     assert codes[3] != codes[1]
     pairs = [(r.id_a, r.id_b) for r in multimodal.audio_near_duplicates(
-        media, max_hamming=3, bands=4, use_real_decoder=True).collect()]
+        media, max_hamming=3, bands=4).collect()]
     assert (1, 2) in pairs and not any(3 in p for p in pairs)
 
 
@@ -2215,8 +2205,7 @@ def test_webp_video_near_duplicates_cross_container(spark):
         "media_id long, content binary")
     pairs = {(r.id_a, r.id_b): r.n_matching
              for r in multimodal.video_near_duplicates(
-                 media, max_hamming=3, bands=4, min_frames=1,
-                 use_real_decoder=True).collect()}
+                 media, max_hamming=3, bands=4, min_frames=1).collect()}
     assert pairs == {(1, 2): 3}
 
 
@@ -2559,12 +2548,11 @@ def test_audio_gate_classifies_ogg_vorbis_as_missing_decoder(spark):
         [(1, ogg_opus_fixture())], "media_id long, content binary")
     with pytest.raises(Exception, match="ffmpeg"):
         multimodal.audio_fingerprint64(
-            media, use_real_decoder=True).collect()
+            media).collect()
     # and skip_undecodable still routes it to NULL like every other
     # undecodable blob
     rows = multimodal.audio_fingerprint64(
-        media, use_real_decoder=True,
-        skip_undecodable=True).collect()
+        media, skip_undecodable=True).collect()
     assert rows[0].afp is None
 
 
@@ -2690,7 +2678,7 @@ def test_bmp_probe_and_image_dedup(spark):
         [(1, mc.encode_png(px)), (2, blob)],
         "media_id long, content binary")
     pairs = [(r.id_a, r.id_b) for r in multimodal.image_near_duplicates(
-        media, max_hamming=3, bands=4, use_real_decoder=True).collect()]
+        media, max_hamming=3, bands=4).collect()]
     assert (1, 2) in pairs
 
 
@@ -2779,7 +2767,7 @@ def test_ico_image_dedup_and_crawl_sniff(spark, tmp_path):
         [(1, mc.encode_png(px)), (2, mc.encode_ico([px]))],
         "media_id long, content binary")
     pairs = [(r.id_a, r.id_b) for r in multimodal.image_near_duplicates(
-        media, max_hamming=3, bands=4, use_real_decoder=True).collect()]
+        media, max_hamming=3, bands=4).collect()]
     assert (1, 2) in pairs
     hdr = (b"HTTP/1.1 200 OK\r\nContent-Type: "
            b"application/octet-stream\r\n\r\n")

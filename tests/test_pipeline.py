@@ -568,47 +568,13 @@ def test_fingerprint_stability(spark, docs):
     assert fp[1] != fp[3]
 
 
-def test_multimodal_features_deterministic(spark):
-    media = spark.createDataFrame(
-        [(1, b"imagebytes-1"), (2, b"imagebytes-2")],
-        "media_id long, content binary")
-    out = multimodal.extract_features(media, dim=8)
-    rows = {r.media_id: r.feature for r in out.collect()}
-    assert len(rows[1]) == 8
-    assert rows[1] != rows[2]
-    assert all(-1.0 <= x < 1.0 for x in rows[1])
-    # deterministic across runs
-    again = {r.media_id: r.feature
-             for r in multimodal.extract_features(media, dim=8).collect()}
-    assert rows == again
-
-
 def test_multimodal_real_decoder_rejects_unknown_formats(spark):
     """PNG decodes natively (test_media.py); formats needing external
     libs still fail loudly instead of faking."""
     media = spark.createDataFrame([(1, b"x")], "media_id long, content binary")
-    out = multimodal.extract_features(media, use_real_decoder=True)
+    out = multimodal.extract_features(media)
     with pytest.raises(Exception, match="(?i)decod|NotImplemented|PythonException"):
         out.collect()
-
-
-def test_resize_images_plumbing(spark):
-    media = spark.createDataFrame(
-        [(1, b"abc"), (2, None)], "media_id long, content binary")
-    out = multimodal.resize_images(media, width=4, height=3)
-    rows = {r.media_id: r for r in out.collect()}
-    assert len(rows[1].content) == 12 and rows[1].width == 4
-    assert rows[1].content == b"abcabcabcabc"
-    assert rows[2].content == b""  # null/empty source -> empty output
-
-
-def test_frame_sampling(spark):
-    media = spark.createDataFrame(
-        [(1, bytes(range(256)) * 10)], "media_id long, content binary")
-    out = multimodal.sample_frames(media, every_n=2, frame_size=256)
-    rows = sorted(out.collect(), key=lambda r: r.frame_no)
-    assert [r.frame_no for r in rows] == [0, 2, 4, 6, 8]
-    assert all(len(r.frame_bytes) == 256 for r in rows)
 
 
 def test_attach_media_meta(spark):
